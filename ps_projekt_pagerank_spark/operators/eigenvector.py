@@ -13,10 +13,11 @@ teleport + out-degree normalization (reference Graph.cpp:118-173); the
 undamped variant is the classic link-analysis baseline the reference
 omits.
 
-Scale shape = Katz/PageRank: the |E|-row weighted adjacency is built
-once (GraphTables), each sweep is one |V|-row state join + hash agg
-with map-side combine + one broadcast scalar; ONE action per sweep
-(the eager localCheckpoint), lineage truncated per sweep.
+Scale shape = Katz/PageRank (operators.sweep drives it): the |E|-row
+weighted adjacency is built once (GraphTables), each sweep is one |V|-row
+state join + hash agg with map-side combine; the max is observed on the
+sweep's ONE action (the eager localCheckpoint, which also truncates
+lineage) and scales the next sweep's scatter.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import GraphTables, build_graph
+from .sweep import iterate, node_state
 
 
 def eigenvector_fixed(
@@ -38,38 +40,28 @@ def eigenvector_fixed(
         raise ValueError("eigenvector_fixed needs num_iterations >= 1")
     own_graph = graph is None
     g = graph or build_graph(edges)
-    adj = g.adj.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("w").cast("double").alias("w"),
+
+    def x(s):
+        # the max-normalized vector. A DAG-shaped operator is nilpotent
+        # (all mass dies once paths run out), so max y can hit 0 — the
+        # vector stays all-zero from then on.
+        m = s["m"]
+        return F.col("y") / F.lit(m) if m > 0 else F.lit(0.0)
+
+    # the state holds the raw gather y; its max rides the sweep's
+    # checkpoint and the next sweep scatters y / max (y0 = 1, max 1)
+    run = iterate(
+        g,
+        node_state(g, F.lit(1.0).alias("y")),
+        lambda s: F.col("w") * x(s),
+        lambda s: [F.coalesce("contrib", F.lit(0.0)).alias("y")],
+        num_iterations,
+        observe=[F.max("y").alias("m")],
     )
-    state = g.nodes.select(
-        F.col("id").cast("long").alias("id"), F.lit(1.0).alias("x")
-    ).localCheckpoint(eager=True)
-    for _ in range(num_iterations):
-        gathered = (
-            adj.join(state.select(F.col("id").alias("src"), "x"), "src")
-            .groupBy(F.col("dst").alias("gid"))
-            .agg(F.sum(F.col("w") * F.col("x")).alias("y"))
-        )
-        y = state.join(
-            gathered, state["id"] == gathered["gid"], "left"
-        ).select("id", F.coalesce("y", F.lit(0.0)).alias("y"))
-        # max-normalize: one broadcast scalar per sweep. A DAG-shaped
-        # operator is nilpotent (all mass dies once paths run out), so
-        # max y can hit 0 — the vector stays all-zero from then on.
-        m = y.agg(F.max("y").alias("m"))
-        state = (
-            y.crossJoin(F.broadcast(m))
-            .select(
-                "id",
-                F.when(F.col("m") > 0, F.col("y") / F.col("m"))
-                .otherwise(F.lit(0.0))
-                .alias("x"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    out = state.select("id", F.round("x", 9).alias("score"))
+    out = run.state.select(
+        F.col("id").cast("long").alias("id"),
+        F.round(x(run.scalars), 9).alias("score"),
+    )
     if own_graph:
         g.unpersist()
     return out

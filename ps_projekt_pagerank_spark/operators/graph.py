@@ -168,11 +168,27 @@ def build_graph(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    # edge totals + the in-degree distribution in one pass over the
-    # persisted adjacency: per-dst row counts feed the automatic skew-salt
-    # choice (the reference's dynamic-schedule analogue, Graph.cpp:206 —
-    # there a hub is load-balanced by work-stealing; here by splitting the
-    # hot reduce key across salt sub-keys)
+    return graph_tables(
+        nodes, adj, int(counts["n"]), int(counts["s"]), id_t, p
+    )
+
+
+def graph_tables(
+    nodes: DataFrame,
+    adj: DataFrame,
+    num_nodes: int,
+    num_sinks: int,
+    id_type: str,
+    partitions: int,
+) -> GraphTables:
+    """GraphTables over persisted node/adjacency frames (build_graph's, or
+    a saved graph's — sources.bucketed.load_graph).
+
+    Edge totals + the in-degree distribution come from one pass over the
+    adjacency: per-dst row counts feed the automatic skew-salt choice (the
+    reference's dynamic-schedule analogue, Graph.cpp:206 — there a hub is
+    load-balanced by work-stealing; here by splitting the hot reduce key
+    across salt sub-keys)."""
     indeg = adj.groupBy("dst").agg(
         F.sum("w").alias("wsum"), F.count("*").alias("rows")
     )
@@ -185,16 +201,17 @@ def build_graph(
     num_adj_rows = int(edge_counts["r"] or 0)
     max_dst_rows = int(edge_counts["max_dst_rows"] or 0)
     n_dst = int(edge_counts["n_dst"] or 1)
-    salt = derive_salt_buckets(num_adj_rows, max_dst_rows, n_dst, p)
     return GraphTables(
         nodes=nodes,
         adj=adj,
-        num_nodes=int(counts["n"]),
+        num_nodes=num_nodes,
         num_edges=int(edge_counts["e"]),
-        num_sinks=int(counts["s"]),
+        num_sinks=num_sinks,
         num_adj_rows=num_adj_rows,
-        id_type=id_t,
-        salt_buckets=salt,
+        id_type=id_type,
+        salt_buckets=derive_salt_buckets(
+            num_adj_rows, max_dst_rows, n_dst, partitions
+        ),
         max_dst_rows=max_dst_rows,
         mean_dst_rows=round(num_adj_rows / max(n_dst, 1), 2),
     )

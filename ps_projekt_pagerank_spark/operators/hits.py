@@ -18,17 +18,52 @@ engine), which is what makes the DuckDB oracle twin hash-stable. Exactly
 
 Scale shape: identical to the PageRank sweep — the |E|-row weighted
 adjacency is built once, src-partitioned and persisted (build_graph);
-each half-round shuffles only the |V|-row score state, gathers via a
-two-phase hash agg (map-side combine), and the max is a scalar agg
-piggybacked on the same pass.
+each half-round shuffles only the |V|-row score state, gathers through
+operators.sweep.gather (two-phase hash agg with map-side combine, salted
+on hub graphs), and the max is a scalar piggybacked on the same pass.
+
+The rounds keep a loop of their own rather than the sweep driver's: the
+state is two vectors that alternate, each normalized by a scalar of its
+OWN gather, not of the state it was gathered from.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .graph import GraphTables, build_graph
+from .sweep import gather
+
+
+def max_normalized(
+    nodes: DataFrame,
+    state: DataFrame,
+    adj: DataFrame,
+    contribution: Column,
+    salt_buckets: int,
+    name: str,
+) -> tuple[DataFrame, DataFrame]:
+    """One half-round shared by HITS and SALSA: gather ``contribution``
+    over ``adj`` and max-normalize it onto ``nodes`` as (id, ``name``);
+    nodes the gather misses hold 0. Returns (raw gather, normalized).
+
+    ONE action: the max rides the eager localCheckpoint of the RAW gather
+    as an Observation (the observed frame IS the checkpointed one — a
+    metric attached to a frame behind the checkpoint's RDD boundary would
+    never publish); the normalized frame stays lazy (a cheap |V|-row join
+    off the cache) and the checkpoint doubles as the lineage cut. The
+    caller unpersists the raw frame once nothing lazy references it."""
+    obs = Observation()
+    raw = (
+        gather(state, adj, contribution, salt_buckets)
+        .observe(obs, F.max("contrib").alias("m"))
+        .localCheckpoint(eager=True)
+    )
+    m = float(obs.get["m"] or 1.0)
+    return raw, nodes.join(raw, nodes["id"] == raw["dst"], "left").select(
+        "id", (F.coalesce("contrib", F.lit(0.0)) / F.lit(m)).alias(name)
+    )
 
 
 def hits(
@@ -43,54 +78,24 @@ def hits(
         raise ValueError(f"hits needs iterations >= 1, got {iterations}")
     own_graph = graph is None
     g = graph or build_graph(edges)
-    adj = g.adj.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("w").cast("double").alias("w"),
-    )
     nodes = g.nodes.select(F.col("id").cast("long").alias("id"))
+    # hub half-rounds gather auth backwards along each link (dst → src)
+    radj = g.adj.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
 
     hub = nodes.select("id", F.lit(1.0).alias("hub"))
-    auth = prev_a = prev_h = None
-    for k in range(iterations):
-        # ONE action per half-round: the max scalar rides the eager
-        # localCheckpoint of the RAW gather as an Observation (the
-        # observed frame IS the checkpointed one — a metric attached to a
-        # frame behind the checkpoint's RDD boundary would never publish);
-        # the normalized frame stays lazy (a cheap |V|-row join off the
-        # cache) and the checkpoint doubles as the per-half-round lineage
-        # cut. Spent half-rounds are unpersisted one round later, once
-        # nothing lazy can still reference them.
-        obs_a = Observation(f"hits_a_{k}")
-        raw_a = (
-            adj.join(hub.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("w") * F.col("hub")).alias("a"))
-            .observe(obs_a, F.max("a").alias("m"))
-            .localCheckpoint(eager=True)
+    auth = prev = None
+    for _ in range(iterations):
+        raw_a, auth = max_normalized(
+            nodes, hub, g.adj, F.col("w") * F.col("hub"), g.salt_buckets, "auth"
         )
-        if prev_a is not None:
-            prev_a.unpersist()
-            prev_h.unpersist()
-        amax = float(obs_a.get["m"] or 1.0)
-        auth = nodes.join(raw_a, "id", "left").select(
-            "id",
-            (F.coalesce("a", F.lit(0.0)) / F.lit(amax)).alias("auth"),
+        # spent half-rounds are unpersisted one round later, once nothing
+        # lazy can still reference them
+        for f in prev or ():
+            f.unpersist()
+        raw_h, hub = max_normalized(
+            nodes, auth, radj, F.col("w") * F.col("auth"), g.salt_buckets, "hub"
         )
-        obs_h = Observation(f"hits_h_{k}")
-        raw_h = (
-            adj.join(auth.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum(F.col("w") * F.col("auth")).alias("h"))
-            .observe(obs_h, F.max("h").alias("m"))
-            .localCheckpoint(eager=True)
-        )
-        hmax = float(obs_h.get["m"] or 1.0)
-        hub = nodes.join(raw_h, "id", "left").select(
-            "id",
-            (F.coalesce("h", F.lit(0.0)) / F.lit(hmax)).alias("hub"),
-        )
-        prev_a, prev_h = raw_a, raw_h
+        prev = (raw_a, raw_h)
     out = auth.join(hub, "id")
     if own_graph:
         g.unpersist()

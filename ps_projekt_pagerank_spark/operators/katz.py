@@ -11,9 +11,9 @@ k into v) · beta. alpha must stay below 1/λ_max(A) for the infinite
 series to converge; fixed sweeps make the result exactly expressible as
 unrolled ANSI SQL (katz_sql — same technique as the PageRank twins).
 
-Scale shape = PageRank's: build-once weighted adjacency (the |E|-row
-shuffle paid once via GraphTables), each sweep one |V|-row state join +
-hash agg with map-side combine; no sink handling and no division at all.
+Scale shape = PageRank's (operators.sweep drives it): build-once
+weighted adjacency, each sweep one |V|-row state join + hash agg with
+map-side combine; no sink handling and no division at all.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import GraphTables, build_graph
+from .sweep import iterate, node_state
 
 DEFAULT_ALPHA = 0.05
 
@@ -38,33 +39,21 @@ def katz_fixed(
         raise ValueError("katz_fixed needs num_iterations >= 1")
     own_graph = graph is None
     g = graph or build_graph(edges)
-    adj = g.adj.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("w").cast("double").alias("w"),
+    run = iterate(
+        g,
+        node_state(g, F.lit(float(beta)).alias("x")),
+        lambda s: F.col("w") * F.col("x"),
+        lambda s: [
+            (
+                F.lit(float(beta))
+                + F.lit(float(alpha)) * F.coalesce("contrib", F.lit(0.0))
+            ).alias("x")
+        ],
+        num_iterations,
     )
-    state = g.nodes.select(
-        F.col("id").cast("long").alias("id"), F.lit(float(beta)).alias("x")
-    ).localCheckpoint(eager=True)
-    for _ in range(num_iterations):
-        gathered = (
-            adj.join(state.select(F.col("id").alias("src"), "x"), "src")
-            .groupBy(F.col("dst").alias("gid"))
-            .agg(F.sum(F.col("w") * F.col("x")).alias("contrib"))
-        )
-        state = (
-            state.join(gathered, state["id"] == gathered["gid"], "left")
-            .select(
-                "id",
-                (
-                    F.lit(float(beta))
-                    + F.lit(float(alpha))
-                    * F.coalesce("contrib", F.lit(0.0))
-                ).alias("x"),
-            )
-            .localCheckpoint(eager=True)  # lineage truncation per sweep
-        )
-    out = state.select("id", F.round("x", 9).alias("katz"))
+    out = run.state.select(
+        F.col("id").cast("long").alias("id"), F.round("x", 9).alias("katz")
+    )
     if own_graph:
         g.unpersist()
     return out

@@ -12,11 +12,11 @@ so far, and the reported importance is the paper's estimator
 (H_T + C_T) / (T + 1), which sums to exactly 1 over the node set
 (Σ C_t = 1 is invariant — each round redistributes, never creates).
 
-Spark shape: IDENTICAL to the PageRank gather-scatter (one scatter join
-against the build-once src-partitioned weighted adjacency, one gather
-agg, one driver-scalar sink sum per round — the host-side scalar the
-reference itself uses, Graph4CL.cpp:166-172), so every scale property of
-the rank loop (skew salting upstream in build_graph, |V|-row per-round
+Spark shape: the PageRank sweep itself (operators.sweep: one scatter
+join against the build-once src-partitioned weighted adjacency, one
+gather agg, one driver-scalar sink sum per round — the host-side scalar
+the reference itself uses, Graph4CL.cpp:166-172), so every scale property
+of the rank loop (skew salting upstream in build_graph, |V|-row per-round
 shuffle, lineage cuts) carries over. The multigraph semantics also carry
 over: a duplicated edge pays twice (weight w in the collapsed adjacency).
 
@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import GraphTables, build_graph
+from .sweep import iterate, node_state, sink_mass
 
 
 def opic(
@@ -48,56 +49,21 @@ def opic(
     own_graph = graph is None
     g = graph or build_graph(edges)
     n = g.num_nodes
-    state = g.nodes.select(
-        F.col("id").cast(g.id_type).alias("id"),
-        F.col("outdeg").cast(g.id_type).alias("outdeg"),
-        "is_sink",
-        F.lit(1.0 / n).alias("cash"),
-        F.lit(0.0).alias("hist"),
+    run = iterate(
+        g,
+        node_state(g, F.lit(1.0 / n).alias("cash"), F.lit(0.0).alias("hist")),
+        lambda s: F.col("w") * F.col("cash") / F.col("outdeg"),
+        lambda s: [
+            # sink cash recycled through the virtual page, paid equally
+            (
+                F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(s["sink"] / n)
+            ).alias("cash"),
+            (F.col("hist") + F.col("cash")).alias("hist"),
+        ],
+        num_iterations,
+        observe=[sink_mass("cash")],
     )
-    for _ in range(num_iterations):
-        row = state.agg(
-            F.sum(
-                F.when(F.col("is_sink"), F.col("cash")).otherwise(0.0)
-            ).alias("s")
-        ).first()
-        virtual = float(row["s"] or 0.0) / n
-        src = state.select(
-            F.col("id").alias("src_id"),
-            "cash",
-            F.col("outdeg").alias("od"),
-        ).where(F.col("od") > 0)
-        contribs = g.adj.join(src, g.adj["src"] == src["src_id"]).select(
-            "dst", (F.col("w") * F.col("cash") / F.col("od")).alias("c")
-        )
-        if g.salt_buckets > 1:
-            # two-stage salted gather for hub skew, as in pagerank._step
-            gathered = (
-                contribs.withColumn(
-                    "salt",
-                    F.pmod(F.xxhash64("dst", "c"), F.lit(g.salt_buckets)),
-                )
-                .groupBy("dst", "salt")
-                .agg(F.sum("c").alias("cs"))
-                .groupBy("dst")
-                .agg(F.sum("cs").alias("contrib"))
-            )
-        else:
-            gathered = contribs.groupBy("dst").agg(F.sum("c").alias("contrib"))
-        state = (
-            state.join(gathered, state["id"] == gathered["dst"], "left")
-            .select(
-                "id",
-                "outdeg",
-                "is_sink",
-                (
-                    F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(virtual)
-                ).alias("cash"),
-                (F.col("hist") + F.col("cash")).alias("hist"),
-            )
-            .localCheckpoint(eager=True)  # lineage cut, as in pagerank_fixed
-        )
-    out = state.select(
+    out = run.state.select(
         F.col("id").cast("long").alias("id"),
         "cash",
         F.col("hist").alias("history"),

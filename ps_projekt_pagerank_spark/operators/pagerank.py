@@ -20,39 +20,22 @@ P6 stop      loop ends on the first sweep that finds no active node; that
              empty sweep IS counted                  (Graph.cpp:130-158)
 P7 counter   returned iteration count includes it    (Graph.cpp:133,172)
 
-Scale design (the part the reference solves with CSR + OpenMP dynamic
-scheduling, SURVEY.md §4):
-
-- the |E|-row adjacency is partitioned ONCE (build_graph) and never
-  re-shuffled; each iteration shuffles only the |V|-row state — and at
-  small |V| Catalyst broadcasts the state, so the scatter join moves
-  nothing at all;
-- the gather is a hash aggregation with automatic partial (map-side)
-  combine, which already collapses each partition's contributions to one
-  row per distinct dst before the shuffle; for pathological hub skew
-  ``salt_buckets`` adds an explicit two-stage aggregation
-  (groupBy(dst, salt) → groupBy(dst)), the reference's dynamic-schedule
-  analogue (Graph.cpp:206);
-- exactly ONE action per iteration (a single stats collect that also
-  materializes the persisted new state) — the same "device→host scalar
-  per iteration" shape as the reference GPU path;
-- lineage is truncated every ``checkpoint_every`` iterations via
-  localCheckpoint (or durably via sources.checkpoint for resume).
+The sweep itself — scatter join, (salted) gather, commit, one action per
+iteration, lineage cut per iteration — is operators.sweep's, shared with
+the rest of the rank family; this module states only each variant's init,
+contribution and commit expressions.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .. import DAMPING, NORTH_EPSILON
 from .graph import GraphTables, build_graph
-
-_STATE_COLS = ["id", "outdeg", "is_sink", "rank", "active"]
+from .sweep import gather, iterate, node_state, sink_mass
 
 
 @dataclass
@@ -62,70 +45,19 @@ class PageRankResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _stats(state: DataFrame) -> tuple[int, float]:
-    """One action: (active node count, Σ rank over sinks)."""
-    row = state.agg(
-        F.sum(F.col("active").cast("long")).alias("n_active"),
-        F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)).alias(
-            "sink_rank"
-        ),
-    ).first()
-    return int(row["n_active"] or 0), float(row["sink_rank"] or 0.0)
+def _rank_share():
+    """P3: each edge carries w copies of rank[src]/outdeg[src]."""
+    return F.col("w") * F.col("rank") / F.col("outdeg")
 
 
-def _step(
-    state: DataFrame,
-    adj: DataFrame,
-    sink_sum,
-    damping: float,
-    delta: float,
-    salt_buckets: int,
-) -> DataFrame:
-    """One Jacobi sweep: scatter-join + gather-agg + freeze-commit.
+def _damped_contrib(damping: float):
+    return F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
 
-    ``sink_sum`` is a Python float (driver-known scalar) or a Column (the
-    in-plan scalar used by multi-sweep blocks, where sweep j+1's sink mass
-    is only known inside the fused plan)."""
-    if not isinstance(sink_sum, F.Column):
-        sink_sum = F.lit(sink_sum)
-    ranks_src = state.select(
-        F.col("id").alias("src_id"), "rank", F.col("outdeg").alias("od")
-    ).where(F.col("od") > 0)
 
-    contribs = adj.join(ranks_src, adj["src"] == ranks_src["src_id"]).select(
-        "dst", (F.col("w") * F.col("rank") / F.col("od")).alias("c")
-    )
-
-    if salt_buckets > 1:
-        # explicit two-stage agg for hub skew: partial per (dst, salt),
-        # then final per dst — deterministic salt from the contribution row
-        salted = contribs.withColumn(
-            "salt", F.pmod(F.xxhash64("dst", "c"), F.lit(salt_buckets))
-        )
-        gathered = (
-            salted.groupBy("dst", "salt")
-            .agg(F.sum("c").alias("cs"))
-            .groupBy("dst")
-            .agg(F.sum("cs").alias("contrib"))
-        )
-    else:
-        gathered = contribs.groupBy("dst").agg(F.sum("c").alias("contrib"))
-
-    new_rank = sink_sum + F.lit(damping) * F.coalesce(
-        F.col("contrib"), F.lit(0.0)
-    )
-    return (
-        state.join(gathered, state["id"] == gathered["dst"], "left")
-        .select(
-            "id",
-            "outdeg",
-            "is_sink",
-            F.when(F.col("active"), new_rank).otherwise(F.col("rank")).alias("rank"),
-            (
-                F.col("active")
-                & (F.abs(new_rank - F.col("rank")) >= F.lit(delta))
-            ).alias("active"),
-        )
+def _new_rank(s, damping: float, n: int):
+    """P2 + P4: sink_sum + d·Σ contribs, sink_sum from the current ranks."""
+    return F.lit(((1.0 - damping) + damping * s["sink"]) / n) + _damped_contrib(
+        damping
     )
 
 
@@ -134,11 +66,8 @@ def pagerank(
     damping: float = DAMPING,
     epsilon: float = NORTH_EPSILON,
     max_iterations: int = 1000,
-    salt_buckets: int | None = None,
     checkpointer=None,
     graph: GraphTables | None = None,
-    partitions: int | None = None,
-    block_size: int = 1,
     init_ranks: DataFrame | None = None,
 ) -> PageRankResult:
     """Run frozen-node PageRank to convergence.
@@ -149,187 +78,62 @@ def pagerank(
     1/N-start sweeps (tested). Nodes absent from ``init_ranks`` (newly
     discovered pages) start at 1/N; all nodes start active.
 
-    ``salt_buckets=None`` (default) engages the bucket count build_graph
-    derived from the in-degree distribution (1 on uniform graphs — see
-    graph.build_graph); pass an int to override.
-
-    ``block_size`` fuses that many sweeps into one Spark action (in-plan
-    sink-mass scalars via broadcast 1-row aggregates); >1 trades up to
-    ``block_size - 1`` wasted post-convergence sweeps for (block-1) fewer
-    driver round-trips per block. Iteration counts and ranks are invariant
-    to the choice (parity-tested). MEASURED on the sf0.1 headline at
-    local[32]: block_size=4 is ~1.3-1.9x SLOWER than 1 (the lazy-checkpoint
-    cascade serializes each sweep behind its broadcast stage and the
-    per-iteration driver latency it removes is not the bottleneck there),
-    so the default stays 1; the knob exists for deployments where driver
-    round-trip latency dominates sweep compute.
+    The gather salts with the bucket count build_graph derived from the
+    in-degree distribution (``graph.salt_buckets``; 1 on uniform graphs).
 
     ``checkpointer`` (sources.checkpoint.IterationCheckpointer) durably
-    writes rank vectors + metrics and enables resume; with or without it,
-    lineage is truncated in-memory every iteration (see the loop body
-    comment). NOTE: snapshots land once per Spark action — i.e. once per
-    *block*. With block_size > 1 only the block-final state is durably
-    written (resume granularity = block), and per-sweep `seconds` is the
-    block wall-clock averaged over the sweeps actually run.
+    writes rank vectors + metrics after every sweep and enables resume;
+    with or without it, lineage is truncated in-memory every iteration.
+    ``metrics`` holds one record per sweep that ran a scatter; the
+    counted empty sweep (P6) has none.
     """
     own_graph = graph is None
-    g = graph or build_graph(edges, partitions)
-    if salt_buckets is None:
-        salt_buckets = g.salt_buckets
+    g = graph or build_graph(edges)
     n = g.num_nodes
     if n == 0:
         return PageRankResult(ranks=g.nodes.select("id", F.lit(0.0).alias("rank")),
                               iterations=0)
 
-    # loop state mirrors the adjacency's (possibly int32) id layout so the
-    # per-iteration scatter join keys match without casts; the public
-    # result schema is cast back to LongType at the end
+    nodes, rank0 = g.nodes, F.lit(1.0 / n)
     if init_ranks is not None:
         init = init_ranks.select(
             F.col("id").cast(g.id_type).alias("iid"),
             F.col("rank").alias("init_rank"),
         )
-        state = (
-            g.nodes.join(init, g.nodes["id"] == init["iid"], "left")
-            .select(
-                F.col("id").cast(g.id_type).alias("id"),
-                F.col("outdeg").cast(g.id_type).alias("outdeg"),
-                "is_sink",
-                F.coalesce("init_rank", F.lit(1.0 / n)).alias("rank"),
-                F.lit(True).alias("active"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    else:
-        state = g.nodes.select(
-            F.col("id").cast(g.id_type).alias("id"),
-            F.col("outdeg").cast(g.id_type).alias("outdeg"),
-            "is_sink",
-            F.lit(1.0 / n).alias("rank"),
-            F.lit(True).alias("active"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    start_iter = 0
-    if checkpointer is not None:
-        resumed = checkpointer.latest(state.sparkSession)
-        if resumed is not None:
-            start_iter, ck = resumed
-            state = ck.select(
-                F.col("id").cast(g.id_type).alias("id"),
-                F.col("outdeg").cast(g.id_type).alias("outdeg"),
-                "is_sink",
-                "rank",
-                "active",
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    n_active, sink_rank = _stats(state)
-    iterations = start_iter
-    metrics: list[dict] = []
-
-    _OBS_COLS = (
-        F.sum(F.col("active").cast("long")).alias("n_active"),
-        F.sum(
-            F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)
-        ).alias("sink_rank"),
+        nodes = g.nodes.join(init, g.nodes["id"] == init["iid"], "left")
+        rank0 = F.coalesce("init_rank", rank0)
+    state = node_state(
+        g, rank0.alias("rank"), F.lit(True).alias("active"), nodes=nodes
     )
+    start_iter = 0
+    resumed = checkpointer.latest(g.nodes.sparkSession) if checkpointer else None
+    if resumed is not None:
+        start_iter, ck = resumed
+        state = node_state(g, "rank", "active", nodes=ck)
 
-    converged = False
-    while iterations < max_iterations and not converged:
-        t0 = time.perf_counter()
-        if n_active == 0:
-            iterations += 1  # final empty sweep counted (Graph.cpp:133,158)
-            break
+    def commit(s):
+        new_rank = _new_rank(s, damping, n)
+        return [
+            F.when(F.col("active"), new_rank).otherwise(F.col("rank")).alias("rank"),
+            (
+                F.col("active")
+                & (F.abs(new_rank - F.col("rank")) >= F.lit(epsilon))
+            ).alias("active"),
+        ]
 
-        # Fuse up to `block_size` sweeps into ONE action. Sweep 0 uses the
-        # driver-known sink mass; each later sweep computes it IN-PLAN as a
-        # broadcast 1-row aggregate of the previous sweep's frame — the
-        # previous frame is lazily localCheckpointed, so the agg branch and
-        # the scatter branch share one cached computation instead of
-        # doubling the plan. Only the LAST frame carries an Observation:
-        # metrics nodes on intermediate frames would sit behind the
-        # checkpoint RDD boundary, outside the final action's query plan,
-        # and never publish. The win over block_size=1 is (block-1) fewer
-        # driver round-trips per block — the fixed cost the reference GPU
-        # loop pays once per iteration as a device->host transfer
-        # (Graph4CL.cpp:166-181). Sweeps past convergence inside a block
-        # are identity (frozen nodes keep their rank, active stays false),
-        # so ranks are unaffected; when the block-end observation reports
-        # 0 active, the exact convergence sweep is pinpointed with cheap
-        # aggregations over the already-cached intermediate frames and the
-        # reference's counting rule (empty sweep counted) replays exactly.
-        block = min(block_size, max_iterations - iterations)
-        cur = state
-        frames = []
-        obs = Observation(f"pr_block_{iterations}")
-        for j in range(block):
-            if j == 0:
-                ss = ((1.0 - damping) + damping * sink_rank) / n
-            else:
-                sr = cur.agg(
-                    F.sum(
-                        F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)
-                    ).alias("sr")
-                )
-                cur = cur.crossJoin(F.broadcast(sr))
-                ss = (
-                    F.lit(1.0 - damping) + F.lit(damping) * F.col("sr")
-                ) / F.lit(float(n))
-            stepped = _step(cur, g.adj, ss, damping, epsilon, salt_buckets)
-            if j == block - 1:
-                stepped = stepped.observe(obs, *_OBS_COLS)
-            cur = stepped.localCheckpoint(eager=(j == block - 1))
-            frames.append(cur)
+    run = iterate(
+        g, state, lambda s: _rank_share(), commit, max_iterations,
+        observe=[sink_mass("rank")], active=F.col("active"),
+        start=start_iter, checkpointer=checkpointer,
+    )
+    iterations = run.iterations
+    if not run.scalars["n_active"] and iterations < max_iterations:
+        iterations += 1  # final empty sweep counted (Graph.cpp:133,158)
 
-        block_dt = time.perf_counter() - t0
-        state.unpersist()
-        state = cur
-        row = obs.get
-        n_active = int(row["n_active"] or 0)
-        sink_rank = float(row["sink_rank"] or 0.0)
-
-        ran = block
-        if n_active == 0 and block > 1:
-            # pinpoint the first converged sweep (cached frames, |V|-row
-            # aggs — no scatter recompute); iterations past it were
-            # identity sweeps and are NOT counted
-            for j, f in enumerate(frames[:-1]):
-                if int(
-                    f.agg(
-                        F.sum(F.col("active").cast("long")).alias("a")
-                    ).first()["a"]
-                    or 0
-                ) == 0:
-                    ran = j + 1
-                    break
-        # block-internal frames were materialized into the cache for the
-        # pinpoint aggs; only the block-final `state` lives on
-        for f in frames[:-1]:
-            f.unpersist()
-        iterations += ran
-        for j in range(ran):
-            metrics.append(
-                {
-                    "iteration": iterations - ran + j + 1,
-                    "edges": g.num_edges,
-                    "seconds": block_dt / ran,
-                    "block": block,
-                    **(
-                        {"n_active": n_active} if j == ran - 1 else {}
-                    ),
-                }
-            )
-        if n_active == 0:
-            # the NEXT sweep is the counted empty one (if the cap allows)
-            if iterations < max_iterations:
-                iterations += 1
-            converged = True
-        if checkpointer is not None and metrics:
-            checkpointer.write(metrics[-1]["iteration"], state, metrics[-1])
-
-    ranks = state.select(F.col("id").cast("long").alias("id"), "rank")
+    ranks = run.state.select(F.col("id").cast("long").alias("id"), "rank")
     if own_graph:
         g.unpersist()
-    return PageRankResult(ranks=ranks, iterations=iterations, metrics=metrics)
+    return PageRankResult(ranks=ranks, iterations=iterations, metrics=run.metrics)
 
 
 def pagerank_personalized_fixed(
@@ -351,8 +155,7 @@ def pagerank_personalized_fixed(
         rank'(v) = ((1-d) + d·Σ_sinks rank) · tele(v) + d·Σ contribs(v)
 
     Exactly ``num_iterations`` synchronous sweeps — unrollable as ANSI SQL
-    (the DuckDB twin in __spark_entry__ replays it). Same scale shape as
-    pagerank_fixed: build-once adjacency, |V|-row state per sweep.
+    (the DuckDB twin in __spark_entry__ replays it).
     """
     if not seeds:
         raise ValueError("pagerank_personalized_fixed needs >= 1 seed node")
@@ -370,48 +173,21 @@ def pagerank_personalized_fixed(
         F.col("id").isin([int(x) for x in seeds]),
         F.lit(1.0 / len(seeds)),
     ).otherwise(F.lit(0.0))
-    state = g.nodes.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("outdeg").cast("long").alias("outdeg"),
-        "is_sink",
-        tele.alias("tele"),
-        tele.alias("rank"),
-    ).localCheckpoint(eager=True)
-    adj = g.adj.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("w").cast("double").alias("w"),
+    run = iterate(
+        g,
+        node_state(g, tele.alias("tele"), tele.alias("rank")),
+        lambda s: _rank_share(),
+        lambda s: [
+            "tele",
+            (
+                F.lit((1.0 - damping) + damping * s["sink"]) * F.col("tele")
+                + _damped_contrib(damping)
+            ).alias("rank"),
+        ],
+        num_iterations,
+        observe=[sink_mass("rank")],
     )
-    for _ in range(num_iterations):
-        row = state.agg(
-            F.sum(
-                F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)
-            ).alias("s")
-        ).first()
-        restart = (1.0 - damping) + damping * float(row["s"] or 0.0)
-        ranks_src = state.select(
-            F.col("id").alias("src"), "rank", F.col("outdeg").alias("od")
-        ).where(F.col("od") > 0)
-        gathered = (
-            adj.join(ranks_src, "src")
-            .groupBy(F.col("dst").alias("gid"))
-            .agg(F.sum(F.col("w") * F.col("rank") / F.col("od")).alias("contrib"))
-        )
-        state = (
-            state.join(gathered, state["id"] == gathered["gid"], "left")
-            .select(
-                "id",
-                "outdeg",
-                "is_sink",
-                "tele",
-                (
-                    F.lit(restart) * F.col("tele")
-                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)  # lineage truncation per sweep
-        )
-    out = state.select("id", "rank")
+    out = run.state.select(F.col("id").cast("long").alias("id"), "rank")
     if own_graph:
         g.unpersist()
     return out
@@ -422,36 +198,24 @@ def pagerank_fixed(
     num_iterations: int,
     damping: float = DAMPING,
     graph: GraphTables | None = None,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Plain power iteration for exactly ``num_iterations`` sweeps, no
     convergence check / freezing — identical to the reference semantics up
     to the first freeze, and exactly expressible as unrolled ANSI SQL
     (the DuckDB oracle in __spark_entry__ uses the same unrolling).
-    ``salt_buckets`` defaults to build_graph's distribution-derived choice.
     """
     own_graph = graph is None
     g = graph or build_graph(edges)
-    if salt_buckets is None:
-        salt_buckets = g.salt_buckets
     n = g.num_nodes
-    state = g.nodes.select(
-        F.col("id").cast(g.id_type).alias("id"),
-        F.col("outdeg").cast(g.id_type).alias("outdeg"),
-        "is_sink",
-        F.lit(1.0 / n).alias("rank"),
-        F.lit(True).alias("active"),
+    run = iterate(
+        g,
+        node_state(g, F.lit(1.0 / n).alias("rank")),
+        lambda s: _rank_share(),
+        lambda s: [_new_rank(s, damping, n).alias("rank")],
+        num_iterations,
+        observe=[sink_mass("rank")],
     )
-    for _ in range(num_iterations):
-        row = state.agg(
-            F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)).alias("s")
-        ).first()
-        sink_sum = ((1.0 - damping) + damping * float(row["s"] or 0.0)) / n
-        state = _step(
-            state, g.adj, sink_sum, damping, delta=-1.0,
-            salt_buckets=salt_buckets,
-        ).localCheckpoint(eager=True)  # lineage truncation, see pagerank()
-    out = state.select(F.col("id").cast("long").alias("id"), "rank")
+    out = run.state.select(F.col("id").cast("long").alias("id"), "rank")
     if own_graph:
         g.unpersist()
     return out
@@ -499,11 +263,6 @@ def pagerank_personalized_batch(
         F.col("outdeg").cast("long").alias("outdeg"),
         "is_sink",
     )
-    adj = g.adj.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("w").cast("double").alias("w"),
-    )
     seeds_df = spark.createDataFrame(
         [(s,) for s in seed_ids], "seed LONG"
     )
@@ -512,7 +271,7 @@ def pagerank_personalized_batch(
     ).localCheckpoint(eager=True)
     for _ in range(num_iterations):
         with_flags = state.join(nodes, "id")
-        sink_mass = (
+        seed_sinks = (
             seeds_df.join(
                 with_flags.where(F.col("is_sink"))
                 .groupBy("seed")
@@ -521,19 +280,18 @@ def pagerank_personalized_batch(
                 "left",
             ).select("seed", F.coalesce("sm", F.lit(0.0)).alias("sm"))
         )
-        contribs = (
-            with_flags.where(F.col("outdeg") > 0)
-            .select(F.col("id").alias("src"), "seed", "rank", "outdeg")
-            .join(adj, "src")
-            .groupBy("seed", F.col("dst").alias("id"))
-            .agg(
-                (
-                    F.lit(damping)
-                    * F.sum(F.col("w") * F.col("rank") / F.col("outdeg"))
-                ).alias("rank")
-            )
+        contribs = gather(
+            with_flags.where(F.col("outdeg") > 0),
+            g.adj,
+            _rank_share(),
+            g.salt_buckets,
+            by=["seed"],
+        ).select(
+            "seed",
+            F.col("dst").cast("long").alias("id"),
+            (F.lit(damping) * F.col("contrib")).alias("rank"),
         )
-        teleport = sink_mass.select(
+        teleport = seed_sinks.select(
             "seed",
             F.col("seed").alias("id"),
             (

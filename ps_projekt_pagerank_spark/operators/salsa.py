@@ -20,17 +20,19 @@ of float summation order, so the DuckDB twin is hash-stable. Exactly
 Scale shape: identical to the PageRank/HITS sweep — the |E|-row weighted
 adjacency builds once (src-partitioned, persisted); the per-edge walk
 weights w/indeg, w/outdeg attach with two |V|-row degree joins paid once
-before the loop; each half-round shuffles only the |V|-row score state and
-its max rides the gather's eager checkpoint as an Observation (one action
-per half-round).
+before the loop; each half-round is HITS's (hits.max_normalized: one
+operators.sweep.gather whose max rides its eager checkpoint as an
+Observation — one action per half-round, and a loop of its own for the
+same reason as HITS).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import GraphTables, build_graph
+from .hits import max_normalized
 
 
 def salsa(
@@ -45,19 +47,14 @@ def salsa(
         raise ValueError(f"salsa needs iterations >= 1, got {iterations}")
     own_graph = graph is None
     g = graph or build_graph(edges)
-    adj = g.adj.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        F.col("w").cast("double").alias("w"),
-    )
     nodes = g.nodes.select(F.col("id").cast("long").alias("id"))
 
     # walk weights, paid once: w/indeg_w on the backward step,
     # w/outdeg_w on the forward step
-    indeg = adj.groupBy("dst").agg(F.sum("w").alias("ind"))
-    outdeg = adj.groupBy("src").agg(F.sum("w").alias("outd"))
+    indeg = g.adj.groupBy("dst").agg(F.sum("w").alias("ind"))
+    outdeg = g.adj.groupBy("src").agg(F.sum("w").alias("outd"))
     wadj = (
-        adj.join(indeg, "dst")
+        g.adj.join(indeg, "dst")
         .join(outdeg, "src")
         .select(
             "src",
@@ -67,41 +64,26 @@ def salsa(
         )
         .localCheckpoint(eager=True)
     )
+    # hub half-rounds walk backward: auth flows dst → src
+    rwadj = wadj.select(
+        F.col("dst").alias("src"), F.col("src").alias("dst"), "w_back"
+    )
 
     auth = nodes.select("id", F.lit(1.0).alias("auth"))
-    hub = prev_h = prev_a = None
-    for k in range(iterations):
-        # one action per half-round: max rides the eager checkpoint of the
-        # RAW gather as an Observation (observing a frame behind the
-        # checkpoint's RDD boundary would never publish — hits.py pattern)
-        obs_h = Observation(f"salsa_h_{k}")
-        raw_h = (
-            wadj.join(auth.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum(F.col("w_back") * F.col("auth")).alias("h"))
-            .observe(obs_h, F.max("h").alias("m"))
-            .localCheckpoint(eager=True)
+    hub = prev = None
+    for _ in range(iterations):
+        # one action per half-round (hits.max_normalized)
+        raw_h, hub = max_normalized(
+            nodes, auth, rwadj, F.col("w_back") * F.col("auth"),
+            g.salt_buckets, "hub",
         )
-        if prev_h is not None:
-            prev_h.unpersist()
-            prev_a.unpersist()
-        hmax = float(obs_h.get["m"] or 1.0)
-        hub = nodes.join(raw_h, "id", "left").select(
-            "id", (F.coalesce("h", F.lit(0.0)) / F.lit(hmax)).alias("hub")
+        for f in prev or ():
+            f.unpersist()
+        raw_a, auth = max_normalized(
+            nodes, hub, wadj, F.col("w_fwd") * F.col("hub"),
+            g.salt_buckets, "auth",
         )
-        obs_a = Observation(f"salsa_a_{k}")
-        raw_a = (
-            wadj.join(hub.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("w_fwd") * F.col("hub")).alias("a"))
-            .observe(obs_a, F.max("a").alias("m"))
-            .localCheckpoint(eager=True)
-        )
-        amax = float(obs_a.get["m"] or 1.0)
-        auth = nodes.join(raw_a, "id", "left").select(
-            "id", (F.coalesce("a", F.lit(0.0)) / F.lit(amax)).alias("auth")
-        )
-        prev_h, prev_a = raw_h, raw_a
+        prev = (raw_h, raw_a)
     out = auth.join(hub, "id")
     # the final raw_a/raw_h checkpoints back `out`; wadj is already behind
     # their lineage cut, so its cache can be dropped here

@@ -14,6 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of this machine's physical memory (``MemTotal``), in whole GB
+    and at least 1g — the driver heap must stay below what the machine
+    has, or the kernel kills the JVM. Spark's own 1g default where
+    ``meminfo`` is unreadable (no procfs)."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1, kib // (2 * 1024 * 1024))}g"
+    except OSError:
+        pass
+    return "1g"
+
+
 def get_spark(
     app_name: str = "ps-projekt-pagerank-spark",
     cores: int | None = None,
@@ -22,7 +38,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores. On a real
+    ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores; the driver
+    heap to $SPARK_DRIVER_MEM or ``default_driver_memory()``. On a real
     cluster the ``master`` is supplied by spark-submit and the local[] master
     set here is ignored (builder config does not override CLI --master).
     """
@@ -43,7 +60,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # a K=6-scale graph build under CPU steal can hold a broadcast

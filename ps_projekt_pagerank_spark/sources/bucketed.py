@@ -24,7 +24,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..operators.graph import GraphTables, derive_salt_buckets
+from ..operators.graph import GraphTables, graph_tables
 
 
 def save_graph(g: GraphTables, name: str, buckets: int | None = None) -> None:
@@ -55,29 +55,11 @@ def load_graph(spark: SparkSession, name: str) -> GraphTables:
         F.count("*").alias("n"),
         F.sum(F.col("is_sink").cast("long")).alias("s"),
     ).first()
-    indeg = adj.groupBy("dst").agg(
-        F.sum("w").alias("wsum"), F.count("*").alias("rows")
-    )
-    ec = indeg.agg(
-        F.sum("wsum").alias("e"),
-        F.sum("rows").alias("r"),
-        F.max("rows").alias("max_dst_rows"),
-        F.count("*").alias("n_dst"),
-    ).first()
-    num_adj_rows = int(ec["r"] or 0)
-    max_dst_rows = int(ec["max_dst_rows"] or 0)
-    n_dst = int(ec["n_dst"] or 1)
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    salt = derive_salt_buckets(num_adj_rows, max_dst_rows, n_dst, p)
-    return GraphTables(
-        nodes=nodes,
-        adj=adj,
-        num_nodes=int(counts["n"]),
-        num_edges=int(ec["e"]),
-        num_sinks=int(counts["s"]),
-        num_adj_rows=num_adj_rows,
-        id_type=dict(adj.dtypes)["src"],
-        salt_buckets=salt,
-        max_dst_rows=max_dst_rows,
-        mean_dst_rows=round(num_adj_rows / max(n_dst, 1), 2),
+    return graph_tables(
+        nodes,
+        adj,
+        int(counts["n"]),
+        int(counts["s"]),
+        dict(adj.dtypes)["src"],
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
     )

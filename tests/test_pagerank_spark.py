@@ -1,6 +1,7 @@
 """Golden tests: Spark PageRank vs the NumPy oracle (north-rule bar:
 ranks allclose 1e-6 + equal iteration counts at epsilon=1e-6)."""
 
+import dataclasses
 import math
 
 import pytest
@@ -35,7 +36,11 @@ def test_fixture_golden(spark, name):
 
 
 def test_salted_two_stage_agg_matches(spark):
-    _assert_matches_oracle(spark, FIXTURE_GRAPHS["mini"], salt_buckets=4)
+    g = build_graph(edges_from_pairs(spark, FIXTURE_GRAPHS["mini"]))
+    _assert_matches_oracle(
+        spark, FIXTURE_GRAPHS["mini"], graph=dataclasses.replace(g, salt_buckets=4)
+    )
+    g.unpersist()
 
 
 def test_multigraph_duplicates_and_self_loops(spark):
@@ -145,11 +150,31 @@ def test_snap_reader_on_reference_fixtures(spark, fname, name):
     assert got == sorted(FIXTURE_GRAPHS[name])
 
 
+def _by_key(df):
+    """{(seed?, id): other values} — one row per key."""
+    keys = [c for c in ("seed", "id") if c in df.columns]
+    return {
+        tuple(r[k] for k in keys): [r[c] for c in df.columns if c not in keys]
+        for r in df.collect()
+    }
+
+
 def test_auto_salt_engages_on_hub_and_matches_unsalted(spark):
     """build_graph must derive salt_buckets > 1 when one dst holds far more
     adjacency rows than the mean AND more than a partition's fair share;
-    the salted two-stage gather must reproduce the unsalted ranks. Uniform
-    graphs must stay at 1 (salting there only adds a second agg)."""
+    the salted two-stage gather must reproduce the unsalted results for
+    every operator that gathers through operators.sweep. Uniform graphs
+    must stay at 1 (salting there only adds a second agg)."""
+    from ps_projekt_pagerank_spark.operators.eigenvector import eigenvector_fixed
+    from ps_projekt_pagerank_spark.operators.hits import hits
+    from ps_projekt_pagerank_spark.operators.katz import katz_fixed
+    from ps_projekt_pagerank_spark.operators.opic import opic
+    from ps_projekt_pagerank_spark.operators.pagerank import (
+        pagerank_personalized_batch,
+        pagerank_personalized_fixed,
+    )
+    from ps_projekt_pagerank_spark.operators.salsa import salsa
+
     # star: 4000 distinct sources all pointing at node 0, plus a sparse
     # uniform background so the mean in-degree stays tiny
     star = [(i, 0) for i in range(1, 4001)] + [
@@ -159,15 +184,31 @@ def test_auto_salt_engages_on_hub_and_matches_unsalted(spark):
     assert g.salt_buckets > 1, (g.salt_buckets, g.max_dst_rows, g.mean_dst_rows)
     assert g.max_dst_rows == 4000
 
-    salted = pagerank(None, epsilon=1e-6, max_iterations=50, graph=g)
-    unsalted = pagerank(
-        None, epsilon=1e-6, max_iterations=50, graph=g, salt_buckets=1
-    )
-    a = {r["id"]: r["rank"] for r in salted.ranks.collect()}
-    b = {r["id"]: r["rank"] for r in unsalted.ranks.collect()}
-    assert a.keys() == b.keys()
-    for nid in a:
-        assert math.isclose(a[nid], b[nid], abs_tol=1e-9), nid
+    operators = {
+        "pagerank": lambda gr: pagerank(
+            None, epsilon=1e-6, max_iterations=50, graph=gr
+        ).ranks,
+        "pagerank_fixed": lambda gr: pagerank_fixed(None, 3, graph=gr),
+        "pagerank_personalized_fixed": lambda gr: pagerank_personalized_fixed(
+            None, [1, 2], 3, graph=gr
+        ),
+        "pagerank_personalized_batch": lambda gr: pagerank_personalized_batch(
+            None, [1, 2], 3, graph=gr
+        ),
+        "katz_fixed": lambda gr: katz_fixed(None, 3, graph=gr),
+        "eigenvector_fixed": lambda gr: eigenvector_fixed(None, 3, graph=gr),
+        "opic": lambda gr: opic(None, 3, graph=gr),
+        "hits": lambda gr: hits(None, 3, graph=gr),
+        "salsa": lambda gr: salsa(None, 3, graph=gr),
+    }
+    unsalted_g = dataclasses.replace(g, salt_buckets=1)
+    for name, run in operators.items():
+        a = _by_key(run(g))
+        b = _by_key(run(unsalted_g))
+        assert a.keys() == b.keys(), name
+        for k in a:
+            for x, y in zip(a[k], b[k]):
+                assert math.isclose(x, y, abs_tol=1e-9), (name, k, x, y)
     g.unpersist()
 
     g_uniform = build_graph(edges_from_pairs(spark, MINI_EDGES))
@@ -175,22 +216,40 @@ def test_auto_salt_engages_on_hub_and_matches_unsalted(spark):
     g_uniform.unpersist()
 
 
-@pytest.mark.parametrize("block", [2, 3, 4])
-def test_multi_sweep_block_parity(spark, block):
-    """block_size must not change iteration counts or ranks — the fused
-    in-plan sink-mass scalars and the reference's per-sweep counting rule
-    (empty sweep counted) must survive blocking."""
-    edges = edges_from_pairs(spark, FIXTURE_GRAPHS["mini"])
-    base = pagerank(edges, epsilon=1e-6, max_iterations=100, block_size=1)
-    blocked = pagerank(
-        edges, epsilon=1e-6, max_iterations=100, block_size=block
+def test_sweep_records(spark, tmp_path):
+    """PageRankResult.metrics holds one record per sweep that ran a
+    scatter — cold, warm-started and resumed — and none for the counted
+    empty sweep; linkbench's edges_per_cpu_s sums their ``edges``."""
+    from ps_projekt_pagerank_spark.sources.checkpoint import IterationCheckpointer
+
+    g = build_graph(edges_from_pairs(spark, FIXTURE_GRAPHS["mini"]))
+    ck_dir = str(tmp_path / "ck")
+    cold = pagerank(None, epsilon=NORTH_EPSILON, graph=g)
+    warm = pagerank(None, epsilon=NORTH_EPSILON, graph=g, init_ranks=cold.ranks)
+    partial = pagerank(
+        None, epsilon=NORTH_EPSILON, max_iterations=5, graph=g,
+        checkpointer=IterationCheckpointer(ck_dir),
     )
-    assert blocked.iterations == base.iterations
-    a = {r["id"]: r["rank"] for r in base.ranks.collect()}
-    b = {r["id"]: r["rank"] for r in blocked.ranks.collect()}
-    assert a.keys() == b.keys()
-    for nid in a:
-        assert math.isclose(a[nid], b[nid], abs_tol=1e-12), nid
+    resumed = pagerank(
+        None, epsilon=NORTH_EPSILON, graph=g,
+        checkpointer=IterationCheckpointer(ck_dir),
+    )
+    # (result, first sweep run, last sweep run)
+    for res, first, last in [
+        (cold, 1, cold.iterations - 1),
+        (warm, 1, warm.iterations - 1),
+        (partial, 1, 5),  # capped: no empty sweep
+        (resumed, 6, resumed.iterations - 1),
+    ]:
+        assert [m["iteration"] for m in res.metrics] == list(range(first, last + 1))
+        for m in res.metrics:
+            assert set(m) == {"iteration", "edges", "seconds", "n_active"}, m
+            assert m["edges"] == g.num_edges
+            assert m["seconds"] > 0
+    for res in (cold, warm, resumed):
+        assert res.metrics[-1]["n_active"] == 0
+    assert partial.metrics[-1]["n_active"] > 0
+    g.unpersist()
 
 
 def test_checkpointer_backend_selection(spark, tmp_path):

@@ -20,7 +20,10 @@ from pyspark.sql import functions as F  # noqa: E402
 from ps_projekt_pagerank_spark import NORTH_EPSILON  # noqa: E402
 from ps_projekt_pagerank_spark.operators import dedup as dd  # noqa: E402
 from ps_projekt_pagerank_spark.operators.graph import build_graph  # noqa: E402
-from ps_projekt_pagerank_spark.operators.pagerank import _step  # noqa: E402
+from ps_projekt_pagerank_spark.operators.sweep import (  # noqa: E402
+    node_state,
+    step,
+)
 from ps_projekt_pagerank_spark.operators.triangles import (  # noqa: E402
     triangles_total,
 )
@@ -88,20 +91,22 @@ def main():
 
     # 2. one PageRank sweep over the built graph
     g = build_graph(edges)
-    state = g.nodes.select(
-        "id", "outdeg", "is_sink",
-        F.lit(1.0 / g.num_nodes).alias("rank"), F.lit(True).alias("active"),
+    state = node_state(g, F.lit(1.0 / g.num_nodes).alias("rank"))
+    new_rank = F.lit(0.1) + F.lit(0.85) * F.coalesce("contrib", F.lit(0.0))
+    sweep = step(
+        g, state, F.col("w") * F.col("rank") / F.col("outdeg"),
+        [new_rank.alias("rank"),
+         (F.abs(new_rank - F.col("rank")) >= NORTH_EPSILON).alias("active")],
     )
-    step = _step(state, g.adj, sink_sum=0.1, damping=0.85,
-                 delta=NORTH_EPSILON, salt_buckets=1)
     sections.append((
-        "PageRank sweep (scatter join + gather agg + commit)",
+        "PageRank sweep (operators.sweep.step: scatter join + gather agg "
+        "+ commit)",
         "The |E|-row adjacency side must NOT re-shuffle (it is "
         "pre-partitioned by src and cached); the |V|-row rank state is the "
         "broadcast/shuffled side. The gather is a two-phase HashAggregate "
         "(partial_sum before the exchange = map-side combine). All "
         "stages inside WholeStageCodegen.",
-        formatted(step),
+        formatted(sweep),
     ))
 
     # 3. triangle counting: canonicalize -> wedge join -> semi-close
