@@ -169,7 +169,7 @@ def build_graph(
     )
 
     return graph_tables(
-        nodes, adj, int(counts["n"]), int(counts["s"]), id_t, p
+        nodes, adj, int(counts["n"]), int(counts["s"] or 0), id_t, p
     )
 
 
@@ -205,7 +205,7 @@ def graph_tables(
         nodes=nodes,
         adj=adj,
         num_nodes=num_nodes,
-        num_edges=int(edge_counts["e"]),
+        num_edges=int(edge_counts["e"] or 0),
         num_sinks=num_sinks,
         num_adj_rows=num_adj_rows,
         id_type=id_type,

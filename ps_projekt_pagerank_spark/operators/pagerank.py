@@ -1,8 +1,11 @@
 """P1-P7 — iterative PageRank with the reference's exact semantics
 (reference sequential loop: src/Graph.cpp:118-173; formula Naloga4.pdf p.1),
-re-expressed as a driver-side while-loop over DataFrame gather/scatter —
-the Spark idiom for the reference's host-driven GPU loop (Graph4CL.cpp:
-112-206, which likewise collects a scalar per iteration and re-injects it).
+run one of two ways. A graph that fits one task's memory runs the
+reference's sequential loop itself, as NumPy inside one Arrow task
+(operators.pagerank_task). A larger graph, or a checkpointed call, runs a
+driver-side while-loop over DataFrame gather/scatter — the Spark idiom for
+the reference's host-driven GPU loop (Graph4CL.cpp:112-206, which likewise
+collects a scalar per iteration and re-injects it).
 
 Semantics (validated against the NumPy oracle, which reproduces the
 reference binary's 25/29/44 fixture iteration counts):
@@ -20,10 +23,10 @@ P6 stop      loop ends on the first sweep that finds no active node; that
              empty sweep IS counted                  (Graph.cpp:130-158)
 P7 counter   returned iteration count includes it    (Graph.cpp:133,172)
 
-The sweep itself — scatter join, (salted) gather, commit, one action per
-iteration, lineage cut per iteration — is operators.sweep's, shared with
-the rest of the rank family; this module states only each variant's init,
-contribution and commit expressions.
+The distributed sweep itself — scatter join, (salted) gather, commit, one
+action per iteration, lineage cut per iteration — is operators.sweep's,
+shared with the rest of the rank family; this module states only each
+variant's init, contribution and commit expressions.
 """
 
 from __future__ import annotations
@@ -34,8 +37,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import DAMPING, NORTH_EPSILON
+from . import pagerank_task
 from .graph import GraphTables, build_graph
-from .sweep import gather, iterate, node_state, sink_mass
+from .sweep import Sweeps, gather, iterate, node_state, sink_mass
 
 
 @dataclass
@@ -81,6 +85,11 @@ def pagerank(
     The gather salts with the bucket count build_graph derived from the
     in-degree distribution (``graph.salt_buckets``; 1 on uniform graphs).
 
+    Graphs that fit one task's memory budget (``pagerank_task.fits``)
+    run every sweep in one task (``pagerank_task``): two Spark jobs per
+    call. Larger graphs, and every call with a ``checkpointer``, run the
+    distributed sweep (operators.sweep): one job per sweep.
+
     ``checkpointer`` (sources.checkpoint.IterationCheckpointer) durably
     writes rank vectors + metrics after every sweep and enables resume;
     with or without it, lineage is truncated in-memory every iteration.
@@ -89,11 +98,40 @@ def pagerank(
     """
     own_graph = graph is None
     g = graph or build_graph(edges)
-    n = g.num_nodes
-    if n == 0:
-        return PageRankResult(ranks=g.nodes.select("id", F.lit(0.0).alias("rank")),
-                              iterations=0)
+    try:
+        n = g.num_nodes
+        if n == 0:
+            return PageRankResult(
+                ranks=g.nodes.select("id", F.lit(0.0).alias("rank")), iterations=0
+            )
+        if checkpointer is None and pagerank_task.fits(g):
+            ranks, metrics = pagerank_task.pagerank_one_task(
+                g, init_ranks, damping, epsilon, max_iterations
+            )
+            sweeps = len(metrics)
+            n_active = metrics[-1]["n_active"] if metrics else n
+        else:
+            run = _sweep_loop(
+                g, init_ranks, damping, epsilon, max_iterations, checkpointer
+            )
+            ranks = run.state.select(F.col("id").cast("long").alias("id"), "rank")
+            sweeps, n_active, metrics = (
+                run.iterations, run.scalars["n_active"], run.metrics
+            )
+        if not n_active and sweeps < max_iterations:
+            sweeps += 1  # final empty sweep counted (Graph.cpp:133,158)
+        return PageRankResult(ranks=ranks, iterations=sweeps, metrics=metrics)
+    finally:
+        if own_graph:
+            g.unpersist()
 
+
+def _sweep_loop(
+    g, init_ranks, damping, epsilon, max_iterations, checkpointer
+) -> Sweeps:
+    """P1-P5 on operators.sweep: one Spark plan and one eager checkpoint
+    per sweep, resumable from ``checkpointer``'s latest snapshot."""
+    n = g.num_nodes
     nodes, rank0 = g.nodes, F.lit(1.0 / n)
     if init_ranks is not None:
         init = init_ranks.select(
@@ -121,19 +159,11 @@ def pagerank(
             ).alias("active"),
         ]
 
-    run = iterate(
+    return iterate(
         g, state, lambda s: _rank_share(), commit, max_iterations,
         observe=[sink_mass("rank")], active=F.col("active"),
         start=start_iter, checkpointer=checkpointer,
     )
-    iterations = run.iterations
-    if not run.scalars["n_active"] and iterations < max_iterations:
-        iterations += 1  # final empty sweep counted (Graph.cpp:133,158)
-
-    ranks = run.state.select(F.col("id").cast("long").alias("id"), "rank")
-    if own_graph:
-        g.unpersist()
-    return PageRankResult(ranks=ranks, iterations=iterations, metrics=run.metrics)
 
 
 def pagerank_personalized_fixed(

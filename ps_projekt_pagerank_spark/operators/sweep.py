@@ -1,10 +1,14 @@
-"""The rank family's one sweep — scatter, gather, commit (reference
-Graph.cpp:118-173) — and the loop that drives it.
+"""The rank family's one distributed sweep — scatter, gather, commit
+(reference Graph.cpp:118-173) — and the loop that drives it.
 
-``gather`` is the package's only scatter join + gather aggregation: every
-rank-family operator (PageRank and its fixed/personalized variants, Katz,
-eigenvector, OPIC, HITS, SALSA) sums its per-edge contributions through
-it, so the hub-skew salt and any later change to the gather land once.
+``gather`` is the package's only distributed scatter join + gather
+aggregation: every rank-family operator (PageRank and its fixed/
+personalized variants, Katz, eigenvector, OPIC, HITS, SALSA) sums its
+per-edge contributions through it whenever it runs on Spark's workers,
+so the hub-skew salt and any later change to the gather land once. The
+one exception is frozen-node ``pagerank`` on a graph that fits one task:
+it runs the whole loop as NumPy in one task (operators.pagerank_task)
+and reaches this module only when checkpointed or over that budget.
 
 ``iterate`` drives the operators whose state is one row per node
 (``node_state``): each states only its init columns, its per-edge

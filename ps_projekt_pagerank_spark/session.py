@@ -14,20 +14,28 @@ import os
 from pyspark.sql import SparkSession
 
 
-def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
-    """Half of this machine's physical memory (``MemTotal``), in whole GB
-    and at least 1g — the driver heap must stay below what the machine
-    has, or the kernel kills the JVM. Spark's own 1g default where
+def mem_total_bytes(meminfo: str = "/proc/meminfo") -> int | None:
+    """This machine's physical memory (``MemTotal``) in bytes; None where
     ``meminfo`` is unreadable (no procfs)."""
     try:
         with open(meminfo) as f:
             for line in f:
                 if line.startswith("MemTotal:"):
-                    kib = int(line.split()[1])
-                    return f"{max(1, kib // (2 * 1024 * 1024))}g"
+                    return int(line.split()[1]) * 1024
     except OSError:
         pass
-    return "1g"
+    return None
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of this machine's physical memory (``MemTotal``), in whole GB
+    and at least 1g — the driver heap must stay below what the machine
+    has, or the kernel kills the JVM. Spark's own 1g default where
+    ``meminfo`` is unreadable (no procfs)."""
+    total = mem_total_bytes(meminfo)
+    if total is None:
+        return "1g"
+    return f"{max(1, total // (2 * 1024**3))}g"
 
 
 def get_spark(

@@ -159,6 +159,12 @@ class IterationCheckpointer:
         return k, df
 
     def metrics(self) -> list[dict]:
+        """The metrics records in iteration order. The snapshot backend
+        appends a record to its log before the snapshot commits, so a
+        crash between the two leaves a record past the latest commit, and
+        the resumed run appends that iteration again: records past the
+        latest committed iteration are dropped, and of an iteration's
+        records the last wins."""
         if self.table is not None:
             spark = SparkSession.getActiveSession()
             if spark is None or not spark.catalog.tableExists(
@@ -174,4 +180,9 @@ class IterationCheckpointer:
         if not os.path.exists(self._metrics_path):
             return []
         with open(self._metrics_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+            by_iter = {
+                rec["iteration"]: rec
+                for rec in map(json.loads, filter(str.strip, f))
+            }
+        last = max(self._iterations(), default=0)
+        return [by_iter[k] for k in sorted(by_iter) if k <= last]

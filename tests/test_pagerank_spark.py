@@ -6,8 +6,10 @@ import math
 
 import pytest
 
-from ps_projekt_pagerank_spark import NORTH_EPSILON
+from ps_projekt_pagerank_spark import NORTH_EPSILON, REFERENCE_DELTA
 from ps_projekt_pagerank_spark.fixtures import FIXTURE_GRAPHS, MINI_EDGES, tripled_k
+from ps_projekt_pagerank_spark.operators import pagerank as pagerank_module
+from ps_projekt_pagerank_spark.operators import pagerank_task
 from ps_projekt_pagerank_spark.operators.graph import build_graph
 from ps_projekt_pagerank_spark.operators.pagerank import pagerank, pagerank_fixed
 from ps_projekt_pagerank_spark.oracle import pagerank as oracle_pagerank
@@ -19,15 +21,38 @@ from ps_projekt_pagerank_spark.plans.reporting import (
 from ps_projekt_pagerank_spark.sources.snap import edges_from_pairs
 
 
-def _assert_matches_oracle(spark, edge_list, **kw):
-    expected, expected_iters = oracle_pagerank(edge_list, delta=NORTH_EPSILON)
+PATHS = ["kernel", "sweep"]
+MULTIGRAPH = [(0, 1), (0, 1), (1, 1), (1, 0), (2, 0), (0, 2)]
+
+
+def _pagerank_on(path, *args, **kw):
+    """pagerank(*args, **kw) on the one-task kernel or the sweep loop."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pagerank_task, "fits", lambda g: path == "kernel")
+        return pagerank(*args, **kw)
+
+
+def _ranks(result):
+    return {r["id"]: r["rank"] for r in result.ranks.collect()}
+
+
+def _assert_matches_oracle(
+    spark, edge_list, path="kernel", delta=NORTH_EPSILON, max_iterations=1000,
+    **kw,
+):
+    expected, expected_iters = oracle_pagerank(
+        edge_list, delta=delta, max_iterations=max_iterations
+    )
     edges = edges_from_pairs(spark, edge_list)
-    result = pagerank(edges, epsilon=NORTH_EPSILON, **kw)
-    got = {r["id"]: r["rank"] for r in result.ranks.collect()}
+    result = _pagerank_on(
+        path, edges, epsilon=delta, max_iterations=max_iterations, **kw
+    )
+    got = _ranks(result)
     assert result.iterations == expected_iters
     assert set(got) == set(expected)
     for nid, r in expected.items():
         assert math.isclose(got[nid], r, abs_tol=1e-6), (nid, got[nid], r)
+    return result
 
 
 @pytest.mark.parametrize("name", ["sink-test", "mini", "small"])
@@ -35,18 +60,112 @@ def test_fixture_golden(spark, name):
     _assert_matches_oracle(spark, FIXTURE_GRAPHS[name])
 
 
+@pytest.mark.parametrize(
+    "case", ["sink-test", "mini", "small", "multigraph", "tripled"]
+)
+def test_sweep_loop_golden(spark, case):
+    """The oracle-golden cases of the one-task tests, on the sweep loop."""
+    edge_list = {
+        **FIXTURE_GRAPHS, "multigraph": MULTIGRAPH,
+        "tripled": tripled_k(MINI_EDGES, 2),
+    }[case]
+    _assert_matches_oracle(spark, edge_list, path="sweep")
+
+
+@pytest.mark.parametrize(
+    ("name", "iterations"), [("mini", 25), ("small", 29), ("sink-test", 44)]
+)
+def test_reference_delta_iterations(spark, name, iterations):
+    """At the reference's own delta the one-task kernel reproduces the
+    reference binary's iteration counts. Only the kernel is held to them:
+    at 1e-16 a freeze turns on the last ulp, and the sweep loop's
+    distributed sums merge in whatever order the shuffle delivers."""
+    res = _assert_matches_oracle(
+        spark, FIXTURE_GRAPHS[name], delta=REFERENCE_DELTA
+    )
+    assert res.iterations == iterations
+
+
+@pytest.mark.parametrize("cap", [1, 5])
+def test_capped_runs_agree(spark, cap):
+    """A capped run counts no empty sweep (linkbench's warm-up job caps
+    at 1); both paths give the oracle's capped ranks and count."""
+    for path in PATHS:
+        res = _assert_matches_oracle(
+            spark, FIXTURE_GRAPHS["mini"], path=path, max_iterations=cap
+        )
+        assert res.iterations == cap == len(res.metrics)
+
+
+def test_warm_start_partial_and_foreign_ids(spark):
+    """Graph ids absent from ``init_ranks``, or with a null rank there,
+    start at 1/N; ids in ``init_ranks`` absent from the graph are
+    ignored. Zero sweeps return the start ranks themselves; three sweeps
+    from them agree on both paths."""
+    g = build_graph(edges_from_pairs(spark, MINI_EDGES))
+    init = {nid: 0.01 * (nid + 1) for nid in range(0, 10, 2)}  # evens only
+    init.update({10**6: 0.5, 10**6 + 1: 0.25})  # not in the graph
+    rows = list(init.items()) + [(1, None)]  # a null start rank: 1/N
+    init_df = spark.createDataFrame(rows, "id LONG, rank DOUBLE")
+    start = {nid: init.get(nid, 1.0 / 10) for nid in range(10)}
+    runs = {}
+    for path in PATHS:
+        zero = _pagerank_on(
+            path, None, graph=g, init_ranks=init_df, max_iterations=0
+        )
+        assert zero.iterations == 0 and zero.metrics == []
+        assert _ranks(zero) == start, path
+        runs[path] = _pagerank_on(
+            path, None, epsilon=NORTH_EPSILON, graph=g, init_ranks=init_df,
+            max_iterations=3,
+        )
+        assert runs[path].iterations == len(runs[path].metrics) == 3, path
+    kernel, sweep = _ranks(runs["kernel"]), _ranks(runs["sweep"])
+    assert kernel.keys() == sweep.keys() == set(range(10))
+    for nid in kernel:
+        assert math.isclose(kernel[nid], sweep[nid], abs_tol=1e-12), nid
+    g.unpersist()
+
+
+def test_wide_ids(spark):
+    """Ids >= 2^31 keep the adjacency in the wide ``long`` layout."""
+    edge_list = [(s + 2**33, d + 2**33) for s, d in MINI_EDGES]
+    g = build_graph(edges_from_pairs(spark, edge_list))
+    assert g.id_type == "long"
+    for path in PATHS:
+        _assert_matches_oracle(spark, edge_list, path=path, graph=g)
+    g.unpersist()
+
+
+def test_empty_edge_list_unpersists_own_graph(spark, monkeypatch):
+    from pyspark.storagelevel import StorageLevel
+
+    built = []
+
+    def build(edges):
+        built.append(build_graph(edges))
+        return built[-1]
+
+    monkeypatch.setattr(pagerank_module, "build_graph", build)
+    res = pagerank(edges_from_pairs(spark, []))
+    assert res.iterations == 0 and res.metrics == []
+    assert res.ranks.count() == 0
+    (g,) = built
+    assert g.nodes.storageLevel == g.adj.storageLevel == StorageLevel.NONE
+
+
 def test_salted_two_stage_agg_matches(spark):
     g = build_graph(edges_from_pairs(spark, FIXTURE_GRAPHS["mini"]))
     _assert_matches_oracle(
-        spark, FIXTURE_GRAPHS["mini"], graph=dataclasses.replace(g, salt_buckets=4)
+        spark, FIXTURE_GRAPHS["mini"], path="sweep",
+        graph=dataclasses.replace(g, salt_buckets=4),
     )
     g.unpersist()
 
 
 def test_multigraph_duplicates_and_self_loops(spark):
     # duplicate edge doubles the contribution; self-loop is legal
-    edge_list = [(0, 1), (0, 1), (1, 1), (1, 0), (2, 0), (0, 2)]
-    _assert_matches_oracle(spark, edge_list)
+    _assert_matches_oracle(spark, MULTIGRAPH)
 
 
 def test_tripled_scale_up(spark):
@@ -185,8 +304,8 @@ def test_auto_salt_engages_on_hub_and_matches_unsalted(spark):
     assert g.max_dst_rows == 4000
 
     operators = {
-        "pagerank": lambda gr: pagerank(
-            None, epsilon=1e-6, max_iterations=50, graph=gr
+        "pagerank": lambda gr: _pagerank_on(
+            "sweep", None, epsilon=1e-6, max_iterations=50, graph=gr
         ).ranks,
         "pagerank_fixed": lambda gr: pagerank_fixed(None, 3, graph=gr),
         "pagerank_personalized_fixed": lambda gr: pagerank_personalized_fixed(
@@ -218,38 +337,78 @@ def test_auto_salt_engages_on_hub_and_matches_unsalted(spark):
 
 def test_sweep_records(spark, tmp_path):
     """PageRankResult.metrics holds one record per sweep that ran a
-    scatter — cold, warm-started and resumed — and none for the counted
-    empty sweep; linkbench's edges_per_cpu_s sums their ``edges``."""
+    scatter — cold and warm-started on either path, capped and resumed
+    on the checkpointed sweep loop — and none for the counted empty
+    sweep; linkbench's edges_per_cpu_s sums their ``edges``."""
     from ps_projekt_pagerank_spark.sources.checkpoint import IterationCheckpointer
 
     g = build_graph(edges_from_pairs(spark, FIXTURE_GRAPHS["mini"]))
     ck_dir = str(tmp_path / "ck")
-    cold = pagerank(None, epsilon=NORTH_EPSILON, graph=g)
-    warm = pagerank(None, epsilon=NORTH_EPSILON, graph=g, init_ranks=cold.ranks)
-    partial = pagerank(
-        None, epsilon=NORTH_EPSILON, max_iterations=5, graph=g,
+    runs = []
+    for path in PATHS:
+        cold = _pagerank_on(path, None, epsilon=NORTH_EPSILON, graph=g)
+        warm = _pagerank_on(
+            path, None, epsilon=NORTH_EPSILON, graph=g, init_ranks=cold.ranks
+        )
+        runs += [(cold, 1, cold.iterations - 1), (warm, 1, warm.iterations - 1)]
+    # a checkpointed call takes the sweep loop whatever the budget
+    partial = _pagerank_on(
+        "kernel", None, epsilon=NORTH_EPSILON, max_iterations=5, graph=g,
         checkpointer=IterationCheckpointer(ck_dir),
     )
-    resumed = pagerank(
-        None, epsilon=NORTH_EPSILON, graph=g,
+    resumed = _pagerank_on(
+        "kernel", None, epsilon=NORTH_EPSILON, graph=g,
         checkpointer=IterationCheckpointer(ck_dir),
     )
     # (result, first sweep run, last sweep run)
-    for res, first, last in [
-        (cold, 1, cold.iterations - 1),
-        (warm, 1, warm.iterations - 1),
+    runs += [
         (partial, 1, 5),  # capped: no empty sweep
         (resumed, 6, resumed.iterations - 1),
-    ]:
+    ]
+    for res, first, last in runs:
         assert [m["iteration"] for m in res.metrics] == list(range(first, last + 1))
         for m in res.metrics:
             assert set(m) == {"iteration", "edges", "seconds", "n_active"}, m
             assert m["edges"] == g.num_edges
             assert m["seconds"] > 0
-    for res in (cold, warm, resumed):
-        assert res.metrics[-1]["n_active"] == 0
-    assert partial.metrics[-1]["n_active"] > 0
+        assert (res.metrics[-1]["n_active"] > 0) == (res is partial)
     g.unpersist()
+
+
+def test_checkpoint_metrics_once_per_iteration_after_crash(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the metrics append and the _COMMITTED marker
+    leaves a record for a snapshot resume ignores; after the resume the
+    log still reads one record per iteration, 1..k."""
+    from ps_projekt_pagerank_spark.sources import checkpoint
+    from ps_projekt_pagerank_spark.sources.checkpoint import IterationCheckpointer
+
+    ck_dir = str(tmp_path / "ck")
+    edges = edges_from_pairs(spark, FIXTURE_GRAPHS["mini"])
+    real_open, failed = open, []
+
+    def crash_once(path, *args, **kw):
+        if str(path).endswith("iter=3/_COMMITTED") and not failed:
+            failed.append(path)
+            raise OSError("injected crash before the commit marker")
+        return real_open(path, *args, **kw)
+
+    monkeypatch.setattr(checkpoint, "open", crash_once, raising=False)
+    with pytest.raises(OSError, match="injected"):
+        pagerank(edges, epsilon=NORTH_EPSILON,
+                 checkpointer=IterationCheckpointer(ck_dir))
+    cp = IterationCheckpointer(ck_dir)
+    assert cp.latest(spark)[0] == 2
+    assert [m["iteration"] for m in cp.metrics()] == [1, 2]
+    resumed = pagerank(
+        edges, epsilon=NORTH_EPSILON, max_iterations=5, checkpointer=cp
+    )
+    k = resumed.iterations
+    assert k == 5
+    assert [m["iteration"] for m in cp.metrics()] == list(range(1, k + 1))
+    with open(f"{ck_dir}/metrics.jsonl") as f:
+        assert sum(1 for line in f if line.strip()) == k + 1  # 3 twice
 
 
 def test_checkpointer_backend_selection(spark, tmp_path):
