@@ -11,8 +11,11 @@ All relational, all shuffle-aware:
   persisted — the Spark analogue of the reference's build-once CSR
   (Graph4CL.cpp:16-46): every PageRank iteration reuses this partitioning,
   so per-iteration shuffles touch only the |V|-row rank state, never the
-  |E|-row edge table (at local scale Catalyst broadcasts the rank state
-  instead, which eliminates even that).
+  |E|-row edge table. Under the session's 64 MB
+  ``autoBroadcastJoinThreshold`` Catalyst broadcasts the rank state
+  instead; the driver builds that broadcast in its heap every sweep, and
+  on an R-MAT scale-22 graph (943k nodes) under a 2g heap it fails with
+  ``notEnoughMemoryToBuildAndBroadcastTable``.
 - G4 sinks: out-degree-0 nodes (reference Graph.cpp:107-115) — kept as a
   boolean on the node table so the per-iteration sink-mass aggregation
   needs no join at all.

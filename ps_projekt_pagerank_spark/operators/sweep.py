@@ -22,11 +22,16 @@ checkpointed one on purpose — a metrics node behind the checkpoint's RDD
 boundary would never publish.
 
 Scale shape: the |E|-row adjacency is partitioned ONCE (build_graph) and
-never re-shuffled; each sweep moves only the |V|-row state — and at small
-|V| Catalyst broadcasts it, so the scatter join moves nothing at all. The
-gather is a hash aggregation with map-side partial combine, which already
-collapses each partition's contributions to one row per distinct dst
-before the shuffle.
+never re-shuffled; each sweep moves only the |V|-row state. When the
+state's size estimate is under the session's 64 MB
+``spark.sql.autoBroadcastJoinThreshold`` (session.get_spark), Catalyst
+broadcasts the state instead of shuffling it. That broadcast is not free:
+the driver builds it in its own heap every sweep, and on an R-MAT
+scale-22 graph (943k nodes) under a 2g driver heap the sweep's eager
+``localCheckpoint`` fails with ``notEnoughMemoryToBuildAndBroadcastTable``.
+The gather is a hash aggregation with map-side partial combine, which
+already collapses each partition's contributions to one row per distinct
+dst before the shuffle.
 """
 
 from __future__ import annotations

@@ -5,5 +5,5 @@
 - pages:       synthetic Common-Crawl-style pages table generator
 - extraction:  S4 pages→edges + text via vectorized Arrow/pandas UDFs
 - tripler:     S3 deterministic 3x graph scale-up
-- checkpoint:  S5 iteration checkpoint write/read (Iceberg-style snapshots)
+- checkpoint:  S5 iteration checkpoint write/read (parquet snapshots)
 """

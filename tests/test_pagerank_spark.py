@@ -214,22 +214,36 @@ def test_checkpoint_resume(spark, tmp_path):
     from ps_projekt_pagerank_spark.sources.checkpoint import IterationCheckpointer
 
     edge_list = FIXTURE_GRAPHS["mini"]
-    ck_dir = str(tmp_path / "ck")
-    cp = IterationCheckpointer(ck_dir)
+    ck_dir = tmp_path / "ck"
+    cp = IterationCheckpointer(str(ck_dir))
     edges = edges_from_pairs(spark, edge_list)
+
+    def snapshots():
+        """{iteration: committed?} of every snapshot dir under ranks/."""
+        return {
+            int(d.name.removeprefix("iter=")): (d / "_COMMITTED").exists()
+            for d in (ck_dir / "ranks").iterdir()
+        }
+
     # run only 5 iterations, then resume to convergence from the snapshot
     partial = pagerank(edges, epsilon=NORTH_EPSILON, max_iterations=5,
                        checkpointer=cp)
     assert partial.iterations == 5
     assert cp.latest(spark)[0] == 5
+    # retention: only the last three snapshots survive, all committed
+    assert snapshots() == {3: True, 4: True, 5: True}
     resumed = pagerank(edges, epsilon=NORTH_EPSILON,
-                       checkpointer=IterationCheckpointer(ck_dir))
+                       checkpointer=IterationCheckpointer(str(ck_dir)))
     expected, expected_iters = oracle_pagerank(edge_list, delta=NORTH_EPSILON)
     assert resumed.iterations == expected_iters
     got = {r["id"]: r["rank"] for r in resumed.ranks.collect()}
     for nid, r in expected.items():
         assert math.isclose(got[nid], r, abs_tol=1e-6)
-    assert len(IterationCheckpointer(ck_dir).metrics()) >= expected_iters - 5
+    last = resumed.metrics[-1]["iteration"]
+    assert last > 5
+    assert snapshots() == {last - 2: True, last - 1: True, last: True}
+    assert cp.latest(spark)[0] == last
+    assert len(cp.metrics()) >= expected_iters - 5
 
 
 def test_snap_reader(spark, tmp_path):
@@ -409,41 +423,3 @@ def test_checkpoint_metrics_once_per_iteration_after_crash(
     assert [m["iteration"] for m in cp.metrics()] == list(range(1, k + 1))
     with open(f"{ck_dir}/metrics.jsonl") as f:
         assert sum(1 for line in f if line.strip()) == k + 1  # 3 twice
-
-
-def test_checkpointer_backend_selection(spark, tmp_path):
-    from ps_projekt_pagerank_spark.sources.checkpoint import (
-        IterationCheckpointer,
-        iceberg_catalogs,
-    )
-
-    # the sandbox image ships no Iceberg runtime — detection must say so
-    # (on a deployment with spark.sql.catalog.<name>=SparkCatalog this
-    # returns the catalog names and the table backend activates)
-    assert iceberg_catalogs(spark) == []
-    with pytest.raises(ValueError):
-        IterationCheckpointer()
-    with pytest.raises(ValueError):
-        IterationCheckpointer(base_dir=str(tmp_path), table="ice.db.t")
-
-
-def test_checkpointer_iceberg_roundtrip(spark, tmp_path):
-    """Runs only where an Iceberg catalog is wired (real deployments);
-    exercises create-on-first-write, append, max(iter) resume and the
-    metrics table."""
-    from ps_projekt_pagerank_spark.sources.checkpoint import (
-        IterationCheckpointer,
-        iceberg_catalogs,
-    )
-
-    cats = iceberg_catalogs(spark)
-    if not cats:
-        pytest.skip("no Iceberg catalog on this session")
-    table = f"{cats[0]}.default.pr_ck_test"
-    cp = IterationCheckpointer(table=table)
-    edges = edges_from_pairs(spark, FIXTURE_GRAPHS["mini"])
-    res = pagerank(edges, epsilon=1e-6, max_iterations=5, checkpointer=cp)
-    k, df = cp.latest(spark)
-    assert k == res.iterations or k == res.iterations - 1
-    assert set(df.columns) >= {"id", "rank", "active"}
-    assert len(cp.metrics()) >= 1

@@ -1,8 +1,8 @@
 """spark-submit packaging smoke: the north-rule claim is "ships via
-spark-submit --py-files"; this builds the SAME zip layout as
-tools/submit_bench.sh, launches a real spark-submit driver in a scratch
-directory (so the package can only resolve from the shipped archive, not
-the repo checkout), runs PageRank through it and checks the result."""
+spark-submit --py-files"; this zips the package, launches a real
+spark-submit driver in a scratch directory (so the package can only
+resolve from the shipped archive, not the repo checkout), runs PageRank
+through it and checks the result."""
 
 import json
 import os
