@@ -1,17 +1,23 @@
 """Graph-construction operators (SURVEY.md §2.2, reference "ETL" phase).
 
-All relational, all shuffle-aware:
+An edge list that fits one task's memory is built there as NumPy
+(operators.graph_task), the way the reference builds its graph in one
+sequential pass (Graph.cpp:60-115); a larger one is built relationally,
+shuffle-aware, by the steps below. Both give the same tables:
 
 - G1 node discovery: union of endpoints, distinct — node set = ids that
   appear in edges (reference Graph.cpp:60-91; the header hint is never
   trusted).
 - G2 out-degree: hash agg with automatic partial (map-side) combine
   (reference Graph.cpp:95-96 increments per occurrence → count(*)).
-- G3 adjacency: the scatter-side edge table, repartitioned ONCE by src and
-  persisted — the Spark analogue of the reference's build-once CSR
-  (Graph4CL.cpp:16-46): every PageRank iteration reuses this partitioning,
-  so per-iteration shuffles touch only the |V|-row rank state, never the
-  |E|-row edge table. Under the session's 64 MB
+- G3 adjacency: the scatter-side edge table, collapsed to one weighted
+  row per (src, dst) and kept for every iteration — the Spark analogue of
+  the reference's build-once CSR (Graph4CL.cpp:16-46). The distributed
+  build repartitions it ONCE by src and persists it, so per-iteration
+  shuffles touch only the |V|-row rank state, never the |E|-row edge
+  table; the one-task build leaves it as ONE partition in (src, dst)
+  order, which the sweep loop re-shuffles every sweep once the state is
+  too large to broadcast. Under the session's 64 MB
   ``autoBroadcastJoinThreshold`` Catalyst broadcasts the rank state
   instead; the driver builds that broadcast in its heap every sweep, and
   on an R-MAT scale-22 graph (943k nodes) under a 2g heap it fails with
@@ -40,14 +46,36 @@ class GraphTables:
     num_edges: int  # multigraph edge count (sum of w)
     num_sinks: int
     num_adj_rows: int = 0  # distinct (src,dst) pairs actually iterated
-    id_type: str = "long"  # narrow int layout when max id < 2^31
+    id_type: str = "long"  # narrow int layout when every id fits int32
     salt_buckets: int = 1  # auto-chosen from the in-degree distribution
     max_dst_rows: int = 0  # adjacency rows into the hottest dst
     mean_dst_rows: float = 0.0
+    # the one-task build's checkpoint, which nodes and adj both read
+    checkpoint: DataFrame | None = None
 
     def unpersist(self) -> None:
         self.nodes.unpersist()
         self.adj.unpersist()
+        if self.checkpoint is not None:
+            # a checkpoint is not in the cache manager that
+            # DataFrame.unpersist releases from; its RDD is persisted
+            self.checkpoint._jdf.queryExecution().logical().rdd().unpersist(
+                False
+            )
+
+
+INT_IDS = (-(2**31), 2**31 - 1)  # the ids the narrow ``int`` layout holds
+
+
+def id_layout(min_id: int | None, max_id: int | None) -> str:
+    """The adjacency's id type: ``int`` when every id is in ``INT_IDS``,
+    ``long`` otherwise and for an empty graph. After dictionary encoding
+    ids fit int32 far beyond any single-cluster graph (2^31 vertices),
+    and the narrow layout halves the bytes every iteration re-scans;
+    external schemas stay LongType (pagerank casts back)."""
+    if max_id is None or min_id < INT_IDS[0] or max_id > INT_IDS[1]:
+        return "long"
+    return "int"
 
 
 def derive_salt_buckets(
@@ -97,10 +125,15 @@ def build_graph(
 ) -> GraphTables:
     """Build the persisted node/adjacency tables for iterative algorithms.
 
-    ``partitions`` pins the adjacency partition count (defaults to the
-    session's shuffle partitions). At cluster scale this is where you size
-    partitions so each holds O(100-500MB) of edges; the rank-state side of
-    every iteration then hash-shuffles |V| rows to meet this layout.
+    An edge list whose row count fits one task's memory budget
+    (``graph_task.fits``) is built in one task (operators.graph_task):
+    two Spark jobs, the row count and one eager checkpoint, and the
+    adjacency is one partition. A larger one is built here by Spark's
+    workers, with the adjacency hash-partitioned by src into
+    ``partitions``. Either way ``partitions`` (default: the session's
+    shuffle partitions) is the partition count the salt choice divides
+    the gather input by; at cluster scale size it so each partition
+    holds O(100-500MB) of edges.
 
     ``weight_col`` names an integer edge-weight column for PRE-weighted
     edge tables (e.g. the host-graph collapse, where weight = collapsed
@@ -108,9 +141,24 @@ def build_graph(
     and out-degrees become out-weight totals — exactly the multiset
     semantics the unweighted path derives from duplicate rows, without
     re-expanding the multiset.
+
+    An edge row with a null endpoint raises ValueError on both paths.
     """
+    from . import graph_task
+
     spark = edges.sparkSession
     p = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    null_endpoint = F.col("src").isNull() | F.col("dst").isNull()
+    m, nulls = edges.agg(
+        F.count("*"), F.count(F.when(null_endpoint, 1))
+    ).first()
+    if nulls:
+        raise ValueError(
+            f"{nulls} edge rows have a null endpoint; a graph's node ids "
+            "cannot be null"
+        )
+    if graph_task.fits(m):
+        return graph_task.build_one_task(edges, p, weight_col)
 
     if weight_col is None:
         outdeg = out_degrees(edges)
@@ -133,14 +181,9 @@ def build_graph(
     counts = nodes.agg(
         F.count("*").alias("n"),
         F.sum(F.col("is_sink").cast("long")).alias("s"),
-        F.max("id").alias("m"),
+        F.min("id").alias("lo"),
+        F.max("id").alias("hi"),
     ).first()
-
-    # narrow-id layout: after dictionary encoding, ids fit int32 far beyond
-    # any single-cluster graph (2^31 vertices); storing the iterated
-    # adjacency as int halves its bytes per row — less cache traffic every
-    # iteration. External schemas stay LongType (pagerank casts back).
-    narrow = counts["m"] is not None and int(counts["m"]) < 2**31
 
     # weighted adjacency: duplicate (src,dst) multigraph edges collapse to
     # one row with a count — each duplicate contributes rank/outdeg
@@ -154,7 +197,7 @@ def build_graph(
     # sortWithinPartitions makes each cached partition a CSR-style run of
     # (src, sorted dst) — the in-memory columnar cache then RLE/delta
     # encodes the src column, shrinking the bytes every iteration re-scans
-    id_t = "int" if narrow else "long"
+    id_t = id_layout(counts["lo"], counts["hi"])
     w_agg = (
         F.count("*") if weight_col is None else F.sum(F.col("_w"))
     ).cast(id_t).alias("w")
@@ -196,27 +239,51 @@ def graph_tables(
         F.sum("w").alias("wsum"), F.count("*").alias("rows")
     )
     edge_counts = indeg.agg(
-        F.sum("wsum").alias("e"),
-        F.sum("rows").alias("r"),
+        F.sum("wsum").alias("num_edges"),
+        F.sum("rows").alias("num_adj_rows"),
         F.max("rows").alias("max_dst_rows"),
         F.count("*").alias("n_dst"),
     ).first()
-    num_adj_rows = int(edge_counts["r"] or 0)
-    max_dst_rows = int(edge_counts["max_dst_rows"] or 0)
-    n_dst = int(edge_counts["n_dst"] or 1)
+    return counted_graph_tables(
+        nodes, adj, id_type, partitions, num_nodes=num_nodes,
+        num_sinks=num_sinks, **edge_counts.asDict(),
+    )
+
+
+def counted_graph_tables(
+    nodes: DataFrame,
+    adj: DataFrame,
+    id_type: str,
+    partitions: int,
+    *,
+    num_nodes: int,
+    num_sinks: int,
+    num_edges: int | None,
+    num_adj_rows: int | None,
+    max_dst_rows: int | None,
+    n_dst: int | None,
+    checkpoint: DataFrame | None = None,
+) -> GraphTables:
+    """GraphTables from the counts of its tables: ``n_dst`` nodes have
+    in-links, ``max_dst_rows`` adjacency rows point into the hottest of
+    them (None counts are those of an empty graph)."""
+    num_adj_rows = int(num_adj_rows or 0)
+    max_dst_rows = int(max_dst_rows or 0)
+    n_dst = int(n_dst or 1)
     return GraphTables(
         nodes=nodes,
         adj=adj,
-        num_nodes=num_nodes,
-        num_edges=int(edge_counts["e"] or 0),
-        num_sinks=num_sinks,
+        num_nodes=int(num_nodes),
+        num_edges=int(num_edges or 0),
+        num_sinks=int(num_sinks or 0),
         num_adj_rows=num_adj_rows,
         id_type=id_type,
         salt_buckets=derive_salt_buckets(
             num_adj_rows, max_dst_rows, n_dst, partitions
         ),
         max_dst_rows=max_dst_rows,
-        mean_dst_rows=round(num_adj_rows / max(n_dst, 1), 2),
+        mean_dst_rows=round(num_adj_rows / n_dst, 2),
+        checkpoint=checkpoint,
     )
 
 

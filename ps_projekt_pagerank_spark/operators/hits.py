@@ -98,6 +98,8 @@ def hits(
         prev = (raw_a, raw_h)
     out = auth.join(hub, "id")
     if own_graph:
+        # out still reads the node table, which unpersist releases
+        out = out.localCheckpoint(eager=True)
         g.unpersist()
     return out
 

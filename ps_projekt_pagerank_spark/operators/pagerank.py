@@ -101,9 +101,8 @@ def pagerank(
     try:
         n = g.num_nodes
         if n == 0:
-            return PageRankResult(
-                ranks=g.nodes.select("id", F.lit(0.0).alias("rank")), iterations=0
-            )
+            ranks = g.nodes.sparkSession.createDataFrame([], "id LONG, rank DOUBLE")
+            return PageRankResult(ranks=ranks, iterations=0)
         if checkpointer is None and pagerank_task.fits(g):
             ranks, metrics = pagerank_task.pagerank_one_task(
                 g, init_ranks, damping, epsilon, max_iterations

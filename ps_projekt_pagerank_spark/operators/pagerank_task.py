@@ -96,19 +96,30 @@ def frozen_sweeps(
     return rank, records
 
 
-def _columns(batches) -> dict[str, np.ndarray]:
-    """The tagged union's batches split into start-rank columns (tag 0)
-    and adjacency columns (tag 1), each concatenated into one array."""
-    parts: dict[str, list] = {c: [] for c in _IN}
+def arrow_columns(batches, parts: dict) -> dict[str, np.ndarray]:
+    """The named columns of Arrow ``batches`` as NumPy arrays, each
+    concatenated over all batches. ``parts`` maps a tag to the columns
+    read from the rows carrying that tag; tag None reads every row (the
+    batches then need no tag column)."""
+    got: dict[str, list] = {c: [] for cols in parts.values() for c in cols}
     for b in batches:
-        is_init = pc.equal(b.column("tag"), 0)
-        for mask, cols in ((is_init, _INIT), (pc.invert(is_init), _ADJ)):
-            rows = b.filter(mask)
+        for tag, cols in parts.items():
+            rows = b if tag is None else b.filter(pc.equal(b.column("tag"), tag))
             for c in cols:
-                parts[c].append(rows.column(c).to_numpy(zero_copy_only=False))
-    if not parts["src"]:
-        raise ValueError("the one-task PageRank received no rows")
-    return {c: np.concatenate(v) for c, v in parts.items()}
+                got[c].append(rows.column(c).to_numpy(zero_copy_only=False))
+    return {c: np.concatenate(v) if v else np.empty(0, np.int64)
+            for c, v in got.items()}
+
+
+def node_index(src: np.ndarray, dst: np.ndarray, w: np.ndarray):
+    """G1 and G2 over edge arrays: the node ids (the sorted distinct
+    endpoints), ``src`` and ``dst`` as indices into them, and each node's
+    out-degree, the exact integer sum of ``w`` over its out-edges."""
+    m = len(src)
+    ids, index = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    outdeg = np.zeros(len(ids), np.int64)
+    np.add.at(outdeg, index[:m], w)
+    return ids, index[:m], index[m:], outdeg
 
 
 def _start_ranks(ids: np.ndarray, init_id: np.ndarray, init_rank: np.ndarray):
@@ -129,19 +140,16 @@ def _task(batches, num_nodes: int, damping: float, epsilon: float,
     """mapInArrow body: the whole frozen-node loop over the union's rows.
     Yields a rank row (tag 0) per node, then a record row (tag 1) per
     sweep."""
-    cols = _columns(batches)
-    m = len(cols["src"])
-    ids, index = np.unique(
-        np.concatenate([cols["src"], cols["dst"]]), return_inverse=True
-    )
+    cols = arrow_columns(batches, {0: _INIT, 1: _ADJ})
+    if not len(cols["src"]):
+        raise ValueError("the one-task PageRank received no rows")
+    ids, src, dst, outdeg = node_index(cols["src"], cols["dst"], cols["w"])
     if len(ids) != num_nodes:
         raise ValueError(
             f"the adjacency holds {len(ids)} node ids, the graph {num_nodes}"
         )
-    src, dst = index[:m], index[m:]
     rank, records = frozen_sweeps(
-        np.bincount(src, weights=cols["w"], minlength=num_nodes),  # G2
-        _start_ranks(ids, cols["id"], cols["rank"]),
+        outdeg, _start_ranks(ids, cols["id"], cols["rank"]),
         src, dst, cols["w"], damping, epsilon, max_iterations,
     )
     n, k = len(ids), len(records)

@@ -89,6 +89,8 @@ def salsa(
     # their lineage cut, so its cache can be dropped here
     wadj.unpersist()
     if own_graph:
+        # out still reads the node table, which unpersist releases
+        out = out.localCheckpoint(eager=True)
         g.unpersist()
     return out
 

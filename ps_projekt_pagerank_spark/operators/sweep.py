@@ -21,8 +21,11 @@ reference GPU loop (Graph4CL.cpp:166-181). The observed frame is the
 checkpointed one on purpose — a metrics node behind the checkpoint's RDD
 boundary would never publish.
 
-Scale shape: the |E|-row adjacency is partitioned ONCE (build_graph) and
-never re-shuffled; each sweep moves only the |V|-row state. When the
+Scale shape: the |E|-row adjacency is laid out ONCE (build_graph: hash-
+partitioned by src, or one partition when the one-task build made it);
+each sweep moves only the |V|-row state. A one-partition adjacency runs
+the scatter join and the partial gather in one task, and is re-shuffled
+every sweep once the state is too large to broadcast. When the
 state's size estimate is under the session's 64 MB
 ``spark.sql.autoBroadcastJoinThreshold`` (session.get_spark), Catalyst
 broadcasts the state instead of shuffling it. That broadcast is not free:

@@ -57,11 +57,12 @@ def apply_edge_delta(
 
     Creates the store when absent (the first micro-batch bootstraps it via
     build_graph + save_graph). Ids must fit the stored id type — the
-    dictionary encoding guarantees density, so a delta id overflowing an
-    int32-narrowed store means the dictionary itself rolled over 2^31 and
-    the store should be rebuilt wide (raised, not silently truncated).
+    dictionary encoding guarantees density, so a delta id outside an
+    int32-narrowed store's range means the dictionary itself rolled over
+    2^31 and the store should be rebuilt wide: the merge fails before it
+    writes anything, instead of silently truncating.
     """
-    from ..operators.graph import build_graph
+    from ..operators.graph import INT_IDS, build_graph
 
     if not _table_exists(spark, name):
         g = build_graph(delta_edges)
@@ -71,20 +72,27 @@ def apply_edge_delta(
 
     cur = spark.read.table(name)
     id_t = dict(cur.dtypes)["src"]
-    if id_t == "int":
-        mx = delta_edges.agg(
-            F.greatest(F.max("src"), F.max("dst")).alias("m")
-        ).first()["m"]
-        if mx is not None and int(mx) >= 2**31:
-            raise ValueError(
-                "delta ids exceed the store's int32 layout — rebuild the "
-                "store with long ids before merging this delta"
+
+    def as_id(c: str):
+        """Column ``c`` in the store's id type; an id outside an int32
+        store's range fails the merge's first action, before any write."""
+        col = F.col(c)
+        if id_t != "int":
+            return col.cast(id_t).alias(c)
+        return (
+            F.when(
+                ~col.between(*INT_IDS),
+                F.raise_error(F.lit(
+                    "delta ids exceed the store's int32 layout — rebuild "
+                    "the store with long ids before merging this delta"
+                )),
             )
-    delta = (
-        delta_edges.select(
-            F.col("src").cast(id_t).alias("src"),
-            F.col("dst").cast(id_t).alias("dst"),
+            .otherwise(col.cast("int"))
+            .alias(c)
         )
+
+    delta = (
+        delta_edges.select(as_id("src"), as_id("dst"))
         .groupBy("src", "dst")
         .agg(F.count("*").cast(id_t).alias("wd"))
     )

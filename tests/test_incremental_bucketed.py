@@ -3,6 +3,8 @@
 import contextlib
 import io
 
+import pytest
+
 from ps_projekt_pagerank_spark.fixtures import FIXTURE_GRAPHS, tripled_k
 from ps_projekt_pagerank_spark.operators.graph import build_graph
 from ps_projekt_pagerank_spark.operators.pagerank import pagerank
@@ -118,6 +120,34 @@ def test_stream_maintained_store_plus_warm_start_equals_batch(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_crawl_store")
         spark.sql("DROP TABLE IF EXISTS t_crawl_store_nodes")
         g_batch.unpersist()
+
+
+def test_out_of_range_delta_fails_before_any_write(spark):
+    """A delta id outside an int32 store's range, above or below it,
+    fails the merge with an error naming the int32 layout, and the store
+    is left as it was."""
+    from ps_projekt_pagerank_spark.streaming.crawl import apply_edge_delta
+
+    name = "t_narrow_store"
+
+    def store():
+        return [
+            sorted(tuple(r) for r in spark.read.table(t).collect())
+            for t in (name, name + "_nodes")
+        ]
+
+    try:
+        apply_edge_delta(spark, name, edges_from_pairs(spark, FIXTURE_GRAPHS["mini"]))
+        assert dict(spark.read.table(name).dtypes)["src"] == "int"
+        before = store()
+        for bad in (2**31, -(2**31) - 1):
+            delta = edges_from_pairs(spark, [(0, 1), (bad, 0)])
+            with pytest.raises(Exception, match="int32 layout"):
+                apply_edge_delta(spark, name, delta)
+            assert store() == before, bad
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(f"DROP TABLE IF EXISTS {name}_nodes")
 
 
 def test_incremental_components_on_maintained_store(spark, tmp_path):

@@ -9,7 +9,7 @@ import pytest
 from ps_projekt_pagerank_spark import NORTH_EPSILON, REFERENCE_DELTA
 from ps_projekt_pagerank_spark.fixtures import FIXTURE_GRAPHS, MINI_EDGES, tripled_k
 from ps_projekt_pagerank_spark.operators import pagerank as pagerank_module
-from ps_projekt_pagerank_spark.operators import pagerank_task
+from ps_projekt_pagerank_spark.operators import graph_task, pagerank_task
 from ps_projekt_pagerank_spark.operators.graph import build_graph
 from ps_projekt_pagerank_spark.operators.pagerank import pagerank, pagerank_fixed
 from ps_projekt_pagerank_spark.oracle import pagerank as oracle_pagerank
@@ -137,9 +137,27 @@ def test_wide_ids(spark):
     g.unpersist()
 
 
+def test_negative_ids(spark):
+    """An id below -2^31 keeps the wide ``long`` layout on both build
+    paths; narrowing it would overflow the cast."""
+    edge_list = [(-(2**40) if s == 0 else s, d) for s, d in MINI_EDGES]
+    for build in ("task", "distributed"):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph_task, "fits", lambda m: build == "task")
+            g = build_graph(edges_from_pairs(spark, edge_list))
+        assert g.id_type == "long", build
+        for path in PATHS:
+            _assert_matches_oracle(spark, edge_list, path=path, graph=g)
+        g.unpersist()
+
+
 def test_empty_edge_list_unpersists_own_graph(spark, monkeypatch):
     from pyspark.storagelevel import StorageLevel
 
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
     built = []
 
     def build(edges):
@@ -152,6 +170,9 @@ def test_empty_edge_list_unpersists_own_graph(spark, monkeypatch):
     assert res.ranks.count() == 0
     (g,) = built
     assert g.nodes.storageLevel == g.adj.storageLevel == StorageLevel.NONE
+    # the frames above may only read what the build persisted; the
+    # JVM's cleaner may meanwhile drop RDDs of earlier tests
+    assert persisted() <= before
 
 
 def test_salted_two_stage_agg_matches(spark):

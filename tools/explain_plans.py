@@ -101,11 +101,15 @@ def main():
     sections.append((
         "PageRank sweep (operators.sweep.step: scatter join + gather agg "
         "+ commit)",
-        "The |E|-row adjacency side must NOT re-shuffle (it is "
-        "pre-partitioned by src and cached); the |V|-row rank state is the "
-        "broadcast/shuffled side. The gather is a two-phase HashAggregate "
-        "(partial_sum before the exchange = map-side combine). All "
-        "stages inside WholeStageCodegen.",
+        "The |E|-row adjacency side must NOT re-shuffle: this graph fits "
+        "the one-task build, so it is one checkpointed partition (Scan "
+        "ExistingRDD, SinglePartition); a graph built by Spark's workers "
+        "is pre-partitioned by src and cached instead. The |V|-row rank "
+        "state is the broadcast/shuffled side. The gather is a two-phase "
+        "HashAggregate; over the one-partition adjacency both phases run "
+        "in that partition's task with no exchange between them, and the "
+        "only exchanges hash the gathered sums and the state for the "
+        "commit join. All stages inside WholeStageCodegen.",
         formatted(sweep),
     ))
 
