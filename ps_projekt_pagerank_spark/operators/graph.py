@@ -25,6 +25,11 @@ shuffle-aware, by the steps below. Both give the same tables:
 - G4 sinks: out-degree-0 nodes (reference Graph.cpp:107-115) — kept as a
   boolean on the node table so the per-iteration sink-mass aggregation
   needs no join at all.
+
+``build_graph`` is the one place a GraphTables is made. A saved graph
+(sources.bucketed) is only its weighted (src, dst, w) adjacency, and
+loading it is ``build_graph(..., weight_col="w")``: no node table or
+count is stored that could disagree with the edges.
 """
 
 from __future__ import annotations
@@ -49,7 +54,6 @@ class GraphTables:
     id_type: str = "long"  # narrow int layout when every id fits int32
     salt_buckets: int = 1  # auto-chosen from the in-degree distribution
     max_dst_rows: int = 0  # adjacency rows into the hottest dst
-    mean_dst_rows: float = 0.0
     # the one-task build's checkpoint, which nodes and adj both read
     checkpoint: DataFrame | None = None
 
@@ -57,11 +61,16 @@ class GraphTables:
         self.nodes.unpersist()
         self.adj.unpersist()
         if self.checkpoint is not None:
-            # a checkpoint is not in the cache manager that
-            # DataFrame.unpersist releases from; its RDD is persisted
-            self.checkpoint._jdf.queryExecution().logical().rdd().unpersist(
-                False
-            )
+            release_checkpoint(self.checkpoint)
+
+
+def release_checkpoint(checkpoint: DataFrame) -> None:
+    """Drop the RDD behind ``checkpoint``, a ``localCheckpoint`` frame,
+    which nothing may read afterwards. ``DataFrame.unpersist`` releases
+    nothing here: a checkpoint's RDD is persisted on its own, outside the
+    cache manager. Spark logs one WARN line per released checkpoint (its
+    lineage is truncated, so it cannot be recomputed)."""
+    checkpoint._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 INT_IDS = (-(2**31), 2**31 - 1)  # the ids the narrow ``int`` layout holds
@@ -140,7 +149,8 @@ def build_graph(
     page-edge count): adjacency weights sum it instead of counting rows,
     and out-degrees become out-weight totals — exactly the multiset
     semantics the unweighted path derives from duplicate rows, without
-    re-expanding the multiset.
+    re-expanding the multiset. A built adjacency fed back this way
+    (sources.bucketed.load_graph) gives the same GraphTables.
 
     An edge row with a null endpoint raises ValueError on both paths.
     """
@@ -166,12 +176,13 @@ def build_graph(
         outdeg = edges.groupBy(F.col("src").alias("id")).agg(
             F.sum(F.col(weight_col)).cast("long").alias("outdeg")
         )
-    # left join (not anti) so one pass carries outdeg and derives is_sink
+    # left join (not anti) so one pass carries outdeg and derives is_sink;
+    # ids LONG whatever the edge id type, as the one-task build gives them
     nodes = (
         node_ids(edges)
         .join(outdeg, "id", "left")
         .select(
-            "id",
+            F.col("id").cast("long").alias("id"),
             F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
         )
         .withColumn("is_sink", F.col("outdeg") == 0)
@@ -214,39 +225,25 @@ def build_graph(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    return graph_tables(
-        nodes, adj, int(counts["n"]), int(counts["s"] or 0), id_t, p
+    # edge totals and the in-degree distribution in one pass over the
+    # adjacency: per-dst row counts feed the automatic skew-salt choice
+    # (the reference's dynamic-schedule analogue, Graph.cpp:206 — there a
+    # hub is load-balanced by work-stealing; here by splitting the hot
+    # reduce key across salt sub-keys)
+    edge_counts = (
+        adj.groupBy("dst")
+        .agg(F.sum("w").alias("wsum"), F.count("*").alias("rows"))
+        .agg(
+            F.sum("wsum").alias("num_edges"),
+            F.sum("rows").alias("num_adj_rows"),
+            F.max("rows").alias("max_dst_rows"),
+            F.count("*").alias("n_dst"),
+        )
+        .first()
     )
-
-
-def graph_tables(
-    nodes: DataFrame,
-    adj: DataFrame,
-    num_nodes: int,
-    num_sinks: int,
-    id_type: str,
-    partitions: int,
-) -> GraphTables:
-    """GraphTables over persisted node/adjacency frames (build_graph's, or
-    a saved graph's — sources.bucketed.load_graph).
-
-    Edge totals + the in-degree distribution come from one pass over the
-    adjacency: per-dst row counts feed the automatic skew-salt choice (the
-    reference's dynamic-schedule analogue, Graph.cpp:206 — there a hub is
-    load-balanced by work-stealing; here by splitting the hot reduce key
-    across salt sub-keys)."""
-    indeg = adj.groupBy("dst").agg(
-        F.sum("w").alias("wsum"), F.count("*").alias("rows")
-    )
-    edge_counts = indeg.agg(
-        F.sum("wsum").alias("num_edges"),
-        F.sum("rows").alias("num_adj_rows"),
-        F.max("rows").alias("max_dst_rows"),
-        F.count("*").alias("n_dst"),
-    ).first()
     return counted_graph_tables(
-        nodes, adj, id_type, partitions, num_nodes=num_nodes,
-        num_sinks=num_sinks, **edge_counts.asDict(),
+        nodes, adj, id_t, p, num_nodes=counts["n"], num_sinks=counts["s"],
+        **edge_counts.asDict(),
     )
 
 
@@ -269,7 +266,6 @@ def counted_graph_tables(
     them (None counts are those of an empty graph)."""
     num_adj_rows = int(num_adj_rows or 0)
     max_dst_rows = int(max_dst_rows or 0)
-    n_dst = int(n_dst or 1)
     return GraphTables(
         nodes=nodes,
         adj=adj,
@@ -279,10 +275,9 @@ def counted_graph_tables(
         num_adj_rows=num_adj_rows,
         id_type=id_type,
         salt_buckets=derive_salt_buckets(
-            num_adj_rows, max_dst_rows, n_dst, partitions
+            num_adj_rows, max_dst_rows, int(n_dst or 1), partitions
         ),
         max_dst_rows=max_dst_rows,
-        mean_dst_rows=round(num_adj_rows / n_dst, 2),
         checkpoint=checkpoint,
     )
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .graph import GraphTables, build_graph
+from .graph import GraphTables, build_graph, release_checkpoint
 from .sweep import gather
 
 
@@ -53,7 +53,8 @@ def max_normalized(
     metric attached to a frame behind the checkpoint's RDD boundary would
     never publish); the normalized frame stays lazy (a cheap |V|-row join
     off the cache) and the checkpoint doubles as the lineage cut. The
-    caller unpersists the raw frame once nothing lazy references it."""
+    caller releases the raw frame (graph.release_checkpoint) once nothing
+    lazy references it."""
     obs = Observation()
     raw = (
         gather(state, adj, contribution, salt_buckets)
@@ -88,10 +89,10 @@ def hits(
         raw_a, auth = max_normalized(
             nodes, hub, g.adj, F.col("w") * F.col("hub"), g.salt_buckets, "auth"
         )
-        # spent half-rounds are unpersisted one round later, once nothing
+        # spent half-rounds are released one round later, once nothing
         # lazy can still reference them
         for f in prev or ():
-            f.unpersist()
+            release_checkpoint(f)
         raw_h, hub = max_normalized(
             nodes, auth, radj, F.col("w") * F.col("auth"), g.salt_buckets, "hub"
         )

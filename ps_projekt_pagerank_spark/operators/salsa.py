@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import GraphTables, build_graph
+from .graph import GraphTables, build_graph, release_checkpoint
 from .hits import max_normalized
 
 
@@ -78,7 +78,7 @@ def salsa(
             g.salt_buckets, "hub",
         )
         for f in prev or ():
-            f.unpersist()
+            release_checkpoint(f)
         raw_a, auth = max_normalized(
             nodes, hub, wadj, F.col("w_fwd") * F.col("hub"),
             g.salt_buckets, "auth",
@@ -86,8 +86,8 @@ def salsa(
         prev = (raw_h, raw_a)
     out = auth.join(hub, "id")
     # the final raw_a/raw_h checkpoints back `out`; wadj is already behind
-    # their lineage cut, so its cache can be dropped here
-    wadj.unpersist()
+    # their lineage cut, so its checkpoint can be released here
+    release_checkpoint(wadj)
     if own_graph:
         # out still reads the node table, which unpersist releases
         out = out.localCheckpoint(eager=True)

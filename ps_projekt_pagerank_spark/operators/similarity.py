@@ -353,11 +353,11 @@ def build_ivf_index(
 ) -> int:
     """Train and PERSIST an IVF index: ``name + "_centroids"`` (cent_id,
     cvec) and ``name + "_cells"`` — the corpus partitioned BY CELL on
-    disk. The vector-side analog of the bucketed graph store: the
-    k-means train + assignment shuffle is paid once per corpus, and
-    every later query batch scans ONLY its probed cells' files
-    (partition pruning — at 10^9 vectors and nprobe/K = 1/8, seven
-    eighths of the bytes are never read). Returns the trained K.
+    disk. The vector-side analog of the saved graph store
+    (sources.bucketed): the k-means train + assignment shuffle is paid
+    once per corpus, and every later query batch scans ONLY its probed
+    cells' files (partition pruning — at 10^9 vectors and nprobe/K = 1/8,
+    seven eighths of the bytes are never read). Returns the trained K.
     """
     spark = vecs.sparkSession
     if num_centroids is None:

@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .graph import GraphTables
+from .graph import GraphTables, release_checkpoint
 
 
 def gather(
@@ -179,7 +179,10 @@ def iterate(
             .observe(obs, *cols)
             .localCheckpoint(eager=True)
         )
-        state.unpersist()
+        if it == start:
+            state.unpersist()  # the caller's frame, cached above
+        else:
+            release_checkpoint(state)  # a checkpoint of this loop's own
         state, s = nxt, obs.get
         it += 1
         metrics.append(

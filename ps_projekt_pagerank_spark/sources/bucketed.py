@@ -1,65 +1,46 @@
-"""Bucketed graph store — persist the build-once graph so future sessions
-skip the build shuffle entirely (north-rule extension; the reference
-re-reads its edge file and rebuilds CSR every run, Graph.cpp:44-103 — on a
-cluster that is a full |E| shuffle per job, which bucketing amortizes to
-zero across runs).
+"""The graph store: a built graph saved as one plain parquet table, its
+weighted adjacency (src, dst, w), under a catalog name.
 
-``save_graph`` writes the weighted adjacency with ``bucketBy(src)`` +
-``sortBy(src, dst)`` (Spark's persisted hash-clustered layout — the same
-clustering build_graph creates in memory) and the node table alongside.
-``load_graph`` reconstructs GraphTables from the catalog: a scatter join
-against rank state then needs an Exchange only on the |V|-row state side
-— the bucketed |E|-row scan carries its own distribution (verified by a
-plan test: no Exchange above the bucketed scan).
+The reference keeps one piece of graph state, the edge list, and
+rebuilds nodes, degrees and CSR from it on every run (Graph.cpp:44-103,
+Graph4CL.cpp:16-46). So does the store: ``load_graph`` hands the stored
+adjacency to ``build_graph`` as a pre-weighted edge list, and node ids,
+out-degrees, sinks, counts, id layout and salt all come from the one
+graph builder. No second table exists that a crash between two writes
+could leave disagreeing with the edges. The stored ``w`` is already
+collapsed, so the rebuilt GraphTables equals the saved one.
+
+Trade-off: a store within the one-task budget (``graph_task.fits``,
+about 3.5M edge rows on a 16 GB host) loads in one task; a larger one
+takes the distributed build (node distinct, out-degree and
+``repartition(p, src)``), where a stored node table would need only one
+stats pass. In exchange the crawl merge (streaming.crawl) writes one
+table and derives no nodes.
+
+The module is named for a ``bucketBy(src)`` layout that no plan used
+(the merge's full-outer join re-shuffles the store; the one-task load
+reads it as one partition). The name, ``save_graph(g, name)`` and the
+(src, dst, w) columns stay because the benchmark (linkbench/) imports
+the one and reads the others.
 
 The table lands in the session catalog's warehouse (spark-warehouse/
-locally; any Hive-compatible metastore on a cluster). Counts and the
-salt decision are recomputed from one pass at load (cheap vs the build
-shuffle they replace).
+locally; any Hive-compatible metastore on a cluster).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..operators.graph import GraphTables, graph_tables
+from ..operators.graph import GraphTables, build_graph
 
 
-def save_graph(g: GraphTables, name: str, buckets: int | None = None) -> None:
-    """Persist adjacency (bucketed by src) + nodes under catalog ``name``."""
-    spark = g.adj.sparkSession
-    b = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    (
-        g.adj.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(b, "src")
-        .sortBy("src", "dst")
-        .saveAsTable(name)
-    )
-    g.nodes.write.mode("overwrite").format("parquet").saveAsTable(
-        name + "_nodes"
-    )
+def save_graph(g: GraphTables, name: str) -> None:
+    """Persist ``g``'s weighted adjacency (src, dst, w) as catalog table
+    ``name``, replacing any table of that name."""
+    g.adj.write.mode("overwrite").format("parquet").saveAsTable(name)
 
 
 def load_graph(spark: SparkSession, name: str) -> GraphTables:
-    """Rebuild GraphTables from a saved bucketed graph — no edge shuffle;
-    the adjacency scan exposes its bucket distribution to every downstream
-    src-keyed join."""
-    adj = spark.read.table(name).persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = spark.read.table(name + "_nodes").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    counts = nodes.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("is_sink").cast("long")).alias("s"),
-    ).first()
-    return graph_tables(
-        nodes,
-        adj,
-        int(counts["n"]),
-        int(counts["s"]),
-        dict(adj.dtypes)["src"],
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
+    """GraphTables of saved graph ``name``, rebuilt from its adjacency by
+    ``build_graph`` (one task when it fits, Spark's workers otherwise)."""
+    return build_graph(spark.read.table(name), weight_col="w")

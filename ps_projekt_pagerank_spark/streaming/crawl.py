@@ -4,27 +4,26 @@ Composes the three pieces that exist separately into the product a crawl
 pipeline runs (north-rule extension; the reference rebuilds its CSR from
 the full edge file every run, Graph.cpp:44-103):
 
-    edge stream --foreachBatch--> MERGE into bucketed store --> load_graph
+    edge stream --foreachBatch--> merge into the store --> load_graph
                 --> pagerank(init_ranks=previous)   (warm re-rank)
 
-``apply_edge_delta`` is the MERGE: the micro-batch collapses to weighted
-(src, dst, w) increments, full-outer-joins the stored adjacency, and the
-summed table is rewritten bucketed-by-src; the node table (outdeg /
-is_sink) is re-derived from the merged adjacency in the same pass. On a
-parquet catalog this is a bucketed rewrite (shuffle bounded by the bucket
-spec); on Iceberg the same frame feeds MERGE INTO and only touched files
-rewrite — the logical plan is identical.
+The store is sources.bucketed's one plain parquet table of the weighted
+adjacency (src, dst, w). ``apply_edge_delta`` is the merge: the
+micro-batch collapses to weighted (src, dst, w) increments,
+full-outer-joins the stored adjacency, and the summed table replaces the
+store in one overwrite. Nothing else is written: node ids, out-degrees
+and sinks are rebuilt from the adjacency at load (``load_graph``).
 
 ``stream_maintain_graph`` drives it from a Structured Streaming source
 via foreachBatch — the scale-correct replacement for the complete-mode
 memory-sink aggregations in streaming.edges (which remain as the
 batch-vs-stream equality test scaffolding).
 
-``incremental_rerank`` closes the loop: load the maintained store (no
-build shuffle) and warm-start PageRank from the previous rank vector —
-convergence in a fraction of the cold sweeps when the delta is small
-(bench-measured; see tests/test_incremental_bucketed.py for the 1e-6
-equality contract vs a cold batch rebuild).
+``incremental_rerank`` closes the loop: load the maintained store and
+warm-start PageRank from the previous rank vector — convergence in a
+fraction of the cold sweeps when the delta is small (bench-measured; see
+tests/test_incremental_bucketed.py for the 1e-6 equality contract vs a
+cold batch rebuild).
 """
 
 from __future__ import annotations
@@ -40,29 +39,20 @@ def _table_exists(spark: SparkSession, name: str) -> bool:
     return spark.catalog.tableExists(name)
 
 
-def _bucket_count(spark: SparkSession, name: str) -> int | None:
-    for row in spark.sql(f"DESCRIBE EXTENDED {name}").collect():
-        if row["col_name"] == "Num Buckets":
-            try:
-                return int(row["data_type"])
-            except ValueError:  # pragma: no cover
-                return None
-    return None
-
-
 def apply_edge_delta(
     spark: SparkSession, name: str, delta_edges: DataFrame
 ) -> None:
-    """MERGE a batch of raw (src, dst) edges into bucketed store ``name``.
+    """Merge a batch of raw (src, dst) edges into store ``name``.
 
     Creates the store when absent (the first micro-batch bootstraps it via
     build_graph + save_graph). Ids must fit the stored id type — the
     dictionary encoding guarantees density, so a delta id outside an
     int32-narrowed store's range means the dictionary itself rolled over
     2^31 and the store should be rebuilt wide: the merge fails before it
-    writes anything, instead of silently truncating.
+    writes anything, instead of silently truncating. The merged adjacency
+    replaces the store in one overwrite, the merge's only write.
     """
-    from ..operators.graph import INT_IDS, build_graph
+    from ..operators.graph import INT_IDS, build_graph, release_checkpoint
 
     if not _table_exists(spark, name):
         g = build_graph(delta_edges)
@@ -109,47 +99,17 @@ def apply_edge_delta(
         # to overwrite a table still referenced by the write's own plan)
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        merged.select(F.col("src").alias("id"))
-        .unionAll(merged.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(
-            merged.groupBy(F.col("src").alias("id")).agg(
-                F.sum("w").cast("long").alias("outdeg")
-            ),
-            "id",
-            "left",
-        )
-        .select(
-            F.col("id").cast(id_t).alias("id"),
-            F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
-        )
-        .withColumn("is_sink", F.col("outdeg") == 0)
-        .localCheckpoint(eager=True)
-    )
-    b = _bucket_count(spark, name) or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    (
-        merged.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(b, "src")
-        .sortBy("src", "dst")
-        .saveAsTable(name)
-    )
-    nodes.write.mode("overwrite").format("parquet").saveAsTable(
-        name + "_nodes"
-    )
+    merged.write.mode("overwrite").format("parquet").saveAsTable(name)
+    release_checkpoint(merged)
 
 
 def stream_maintain_graph(
     spark: SparkSession, parquet_dir: str, name: str
 ) -> None:
-    """Maintain bucketed store ``name`` from a parquet edge-stream dir:
-    each micro-batch MERGEs via apply_edge_delta (foreachBatch — the
-    upsert-sink shape; swap the source for Kafka and the store for Iceberg
-    on a cluster without touching the merge logic). Runs all available
-    input, then stops."""
+    """Maintain store ``name`` from a parquet edge-stream dir: each
+    micro-batch merges via apply_edge_delta (foreachBatch — the
+    upsert-sink shape; a Kafka source swaps in without touching the merge
+    logic). Runs all available input, then stops."""
     schema = spark.read.parquet(parquet_dir).schema
     stream = (
         spark.readStream.schema(schema)
@@ -172,8 +132,8 @@ def incremental_rerank(
     prev_ranks: DataFrame | None = None,
     **pagerank_kwargs,
 ) -> PageRankResult:
-    """Load the maintained store (no build shuffle) and re-rank, warm-
-    starting from ``prev_ranks`` when given."""
+    """Load the maintained store (load_graph: one task when it fits) and
+    re-rank, warm-starting from ``prev_ranks`` when given."""
     g = load_graph(spark, name)
     try:
         return pagerank(
@@ -190,7 +150,7 @@ def incremental_components(
     **cc_kwargs,
 ) -> DataFrame:
     """The CC leg of the crawl loop: run connected components over the
-    maintained store's adjacency (the bucketed scan — no build shuffle),
+    maintained store's adjacency (a plain scan — no graph build),
     warm-starting from the previous run's labels when given. Additions-
     only, like the store itself (see connected_components' contract); an
     unchanged region of the graph costs zero productive rounds."""
@@ -211,8 +171,7 @@ def apply_doc_delta(
     the batch annotated (doc_id, fp, is_duplicate, first_seen_doc_id).
     Re-crawled and mirrored pages are flagged WITHOUT rescanning the
     corpus — the registry holds one row per distinct content ever seen,
-    which is how exact dedup stays O(batch) per increment at crawl scale
-    (on Iceberg the same frame feeds MERGE INTO ... WHEN NOT MATCHED).
+    which is how exact dedup stays O(batch) per increment at crawl scale.
 
     Within-batch duplicates: the smallest doc_id wins registration, the
     rest are flagged against it (same printf-key argmin as the batch

@@ -113,3 +113,31 @@ def test_one_task_graph_fits_the_one_task_pagerank(spark):
     g = _build_on("task", edges_from_pairs(spark, FIXTURE_GRAPHS["small"]))
     assert g.checkpoint is not None and pagerank_task.fits(g)
     g.unpersist()
+
+
+def _checkpoint_ids(df) -> set[int]:
+    """Ids of the checkpointed RDDs that ``df``'s plan reads."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    }
+
+
+def test_rank_loops_release_their_checkpoints(spark):
+    """The sweep loop and the HITS/SALSA half-rounds release each state
+    they replace (graph.release_checkpoint): after a call, no new RDD is
+    left persisted but those its returned frame reads."""
+    from ps_projekt_pagerank_spark.operators.hits import hits
+    from ps_projekt_pagerank_spark.operators.pagerank import pagerank_fixed
+    from ps_projekt_pagerank_spark.operators.salsa import salsa
+
+    g = build_graph(edges_from_pairs(spark, MINI_EDGES))
+    try:
+        for op in (pagerank_fixed, hits, salsa):
+            before = _persisted(spark)
+            out = op(None, 10 if op is pagerank_fixed else 3, graph=g)
+            assert _persisted(spark) <= before | _checkpoint_ids(out), op
+    finally:
+        g.unpersist()

@@ -1,4 +1,4 @@
-"""Warm-start (incremental) PageRank + the bucketed graph store."""
+"""Warm-start (incremental) PageRank + the graph store."""
 
 import contextlib
 import io
@@ -6,9 +6,11 @@ import io
 import pytest
 
 from ps_projekt_pagerank_spark.fixtures import FIXTURE_GRAPHS, tripled_k
+from ps_projekt_pagerank_spark.operators import graph_task
 from ps_projekt_pagerank_spark.operators.graph import build_graph
 from ps_projekt_pagerank_spark.operators.pagerank import pagerank
 from ps_projekt_pagerank_spark.sources.bucketed import load_graph, save_graph
+from tests.test_graph_task import BUILDS, _contents, _persisted
 from tests.test_pagerank_spark import edges_from_pairs
 
 
@@ -43,36 +45,41 @@ def test_warm_start_converges_faster(spark):
 
 
 def test_bucketed_store_roundtrip_and_no_exchange(spark):
-    """save_graph/load_graph must reproduce the graph (same counts, same
-    converged ranks) AND the persisted bucket layout must carry into
-    plans: a src-keyed aggregation over the loaded adjacency runs with NO
-    Exchange — the shuffle the store amortizes away across sessions."""
+    """save_graph/load_graph must reproduce the graph on both build paths
+    (every GraphTables field, the node table, the adjacency and the
+    converged ranks), and a src-keyed aggregation over the loaded
+    adjacency must add NO Exchange: the one-task build's adjacency is
+    one partition, the distributed build's is hash-partitioned by src.
+    (The distributed build's own shuffle shows in its cached plan, below
+    the InMemoryRelation; that is the load, not the aggregation.)"""
     edges = edges_from_pairs(spark, FIXTURE_GRAPHS["small"])
-    g = build_graph(edges)
-    try:
-        save_graph(g, "t_bucketed_graph", buckets=4)
-        g2 = load_graph(spark, "t_bucketed_graph")
-        assert (g2.num_nodes, g2.num_edges, g2.num_sinks) == (
-            g.num_nodes, g.num_edges, g.num_sinks
-        )
-        plan_df = g2.adj.groupBy("src").count()
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            plan_df.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
+    for path in BUILDS:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph_task, "fits", lambda m: path == "task")
+            g = build_graph(edges)
+            try:
+                save_graph(g, "t_bucketed_graph")
+                g2 = load_graph(spark, "t_bucketed_graph")
+                assert _contents(g2) == _contents(g), path
+                plan_df = g2.adj.groupBy("src").count()
+                buf = io.StringIO()
+                with contextlib.redirect_stdout(buf):
+                    plan_df.explain("formatted")
+                plan = buf.getvalue()
+                tree = plan.split("\n\n")[0]
+                assert "Exchange" not in tree.split("InMemoryRelation")[0], (
+                    path, plan
+                )
 
-        a = {r["id"]: r["rank"] for r in pagerank(None, graph=g).ranks.collect()}
-        b = {r["id"]: r["rank"] for r in pagerank(None, graph=g2).ranks.collect()}
-        assert a.keys() == b.keys()
-        for nid in a:
-            assert abs(a[nid] - b[nid]) < 1e-12, nid
-        g2.unpersist()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_graph")
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_graph_nodes")
-        g.unpersist()
+                a = {r["id"]: r["rank"] for r in pagerank(None, graph=g).ranks.collect()}
+                b = {r["id"]: r["rank"] for r in pagerank(None, graph=g2).ranks.collect()}
+                assert a.keys() == b.keys()
+                for nid in a:
+                    assert abs(a[nid] - b[nid]) < 1e-12, (path, nid)
+                g2.unpersist()
+            finally:
+                spark.sql("DROP TABLE IF EXISTS t_bucketed_graph")
+                g.unpersist()
 
 
 def test_stream_maintained_store_plus_warm_start_equals_batch(spark, tmp_path):
@@ -131,14 +138,12 @@ def test_out_of_range_delta_fails_before_any_write(spark):
     name = "t_narrow_store"
 
     def store():
-        return [
-            sorted(tuple(r) for r in spark.read.table(t).collect())
-            for t in (name, name + "_nodes")
-        ]
+        return sorted(tuple(r) for r in spark.read.table(name).collect())
 
     try:
         apply_edge_delta(spark, name, edges_from_pairs(spark, FIXTURE_GRAPHS["mini"]))
         assert dict(spark.read.table(name).dtypes)["src"] == "int"
+        assert not spark.catalog.tableExists(name + "_nodes")
         before = store()
         for bad in (2**31, -(2**31) - 1):
             delta = edges_from_pairs(spark, [(0, 1), (bad, 0)])
@@ -147,7 +152,25 @@ def test_out_of_range_delta_fails_before_any_write(spark):
             assert store() == before, bad
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        spark.sql(f"DROP TABLE IF EXISTS {name}_nodes")
+
+
+def test_merges_release_their_checkpoints(spark):
+    """A merge's checkpoint is released once the store is written: three
+    merges into a store leave no persisted RDD behind."""
+    from ps_projekt_pagerank_spark.streaming.crawl import apply_edge_delta
+
+    name = "t_release_store"
+    try:
+        before = _persisted(spark)
+        apply_edge_delta(spark, name, edges_from_pairs(spark, FIXTURE_GRAPHS["mini"]))
+        for delta in ([(0, 1)], [(2, 5), (5, 2)], [(9, 0), (0, 9), (9, 0)]):
+            apply_edge_delta(spark, name, edges_from_pairs(spark, delta))
+        assert _persisted(spark) <= before
+        assert spark.read.table(name).agg({"w": "sum"}).first()[0] == (
+            len(FIXTURE_GRAPHS["mini"]) + 6
+        )
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_incremental_components_on_maintained_store(spark, tmp_path):

@@ -335,7 +335,7 @@ def test_auto_salt_engages_on_hub_and_matches_unsalted(spark):
         (i, 1 + i % 997) for i in range(1, 4001)
     ]
     g = build_graph(edges_from_pairs(spark, star), partitions=8)
-    assert g.salt_buckets > 1, (g.salt_buckets, g.max_dst_rows, g.mean_dst_rows)
+    assert g.salt_buckets > 1, (g.salt_buckets, g.max_dst_rows, g.num_adj_rows)
     assert g.max_dst_rows == 4000
 
     operators = {
