@@ -127,22 +127,17 @@ def sink_nodes(edges: DataFrame) -> DataFrame:
     )
 
 
-def build_graph(
-    edges: DataFrame,
-    partitions: int | None = None,
-    weight_col: str | None = None,
-) -> GraphTables:
+def build_graph(edges: DataFrame, weight_col: str | None = None) -> GraphTables:
     """Build the persisted node/adjacency tables for iterative algorithms.
 
     An edge list whose row count fits one task's memory budget
     (``graph_task.fits``) is built in one task (operators.graph_task):
     two Spark jobs, the row count and one eager checkpoint, and the
     adjacency is one partition. A larger one is built here by Spark's
-    workers, with the adjacency hash-partitioned by src into
-    ``partitions``. Either way ``partitions`` (default: the session's
-    shuffle partitions) is the partition count the salt choice divides
-    the gather input by; at cluster scale size it so each partition
-    holds O(100-500MB) of edges.
+    workers, with the adjacency hash-partitioned by src into the
+    session's ``spark.sql.shuffle.partitions``. Either way that count is
+    the partition count the salt choice divides the gather input by; at
+    cluster scale size it so each partition holds O(100-500MB) of edges.
 
     ``weight_col`` names an integer edge-weight column for PRE-weighted
     edge tables (e.g. the host-graph collapse, where weight = collapsed
@@ -156,8 +151,6 @@ def build_graph(
     """
     from . import graph_task
 
-    spark = edges.sparkSession
-    p = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     null_endpoint = F.col("src").isNull() | F.col("dst").isNull()
     m, nulls = edges.agg(
         F.count("*"), F.count(F.when(null_endpoint, 1))
@@ -168,8 +161,9 @@ def build_graph(
             "cannot be null"
         )
     if graph_task.fits(m):
-        return graph_task.build_one_task(edges, p, weight_col)
+        return graph_task.build_one_task(edges, weight_col)
 
+    p = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if weight_col is None:
         outdeg = out_degrees(edges)
     else:
@@ -242,7 +236,7 @@ def build_graph(
         .first()
     )
     return counted_graph_tables(
-        nodes, adj, id_t, p, num_nodes=counts["n"], num_sinks=counts["s"],
+        nodes, adj, id_t, num_nodes=counts["n"], num_sinks=counts["s"],
         **edge_counts.asDict(),
     )
 
@@ -251,7 +245,6 @@ def counted_graph_tables(
     nodes: DataFrame,
     adj: DataFrame,
     id_type: str,
-    partitions: int,
     *,
     num_nodes: int,
     num_sinks: int,
@@ -263,7 +256,9 @@ def counted_graph_tables(
 ) -> GraphTables:
     """GraphTables from the counts of its tables: ``n_dst`` nodes have
     in-links, ``max_dst_rows`` adjacency rows point into the hottest of
-    them (None counts are those of an empty graph)."""
+    them (None counts are those of an empty graph). The salt choice
+    divides the gather input by the session's shuffle partitions."""
+    partitions = int(adj.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     num_adj_rows = int(num_adj_rows or 0)
     max_dst_rows = int(max_dst_rows or 0)
     return GraphTables(

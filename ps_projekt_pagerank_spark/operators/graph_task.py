@@ -32,14 +32,6 @@ from pyspark.sql import functions as F
 from .graph import GraphTables, counted_graph_tables, id_layout
 from .pagerank_task import ROW_BYTES, arrow_columns, budget_bytes, node_index
 
-# Bytes the task's Python worker may add per edge row. Its peak RSS
-# (VmHWM at task end less VmRSS at task start, a fresh worker per task)
-# was measured on an R-MAT graph with a hub of 0.46M edge rows and on
-# three disjoint copies of it (1.38M rows): 86 MB = 197 bytes a row and
-# 198 MB = 150 bytes a row, about 127 bytes a row at the margin plus
-# ~30 MB fixed; 250 leaves a quarter or more of headroom above 0.5M rows
-EDGE_ROW_BYTES = 250
-
 # tag 0: a node (a = id, b = outdeg, c = adjacency rows into it);
 # tag 1: an adjacency row (a = src, b = dst, c = w)
 _OUT = pa.schema([("tag", pa.int8()), ("a", pa.int64()), ("b", pa.int64()),
@@ -49,11 +41,15 @@ _OUT_DDL = "tag TINYINT, a LONG, b LONG, c LONG"
 
 def fits(num_edge_rows: int) -> bool:
     """Whether an edge list of ``num_edge_rows`` rows fits the task's
-    budget (pagerank_task.budget_bytes). It bounds the graph too: m edge
-    rows make at most 2m nodes and m adjacency rows, so pricing each edge
-    row at no less than 3 * ROW_BYTES keeps every graph built here within
-    pagerank_task.fits."""
-    return num_edge_rows * max(EDGE_ROW_BYTES, 3 * ROW_BYTES) <= budget_bytes()
+    budget (pagerank_task.budget_bytes), each edge row priced at
+    3 * ROW_BYTES. That bounds the graph: m edge rows make at most 2m
+    nodes and m adjacency rows, so every graph built here is within
+    pagerank_task.fits. It also bounds the build itself: the task's
+    Python worker peaks at 150-197 bytes per edge row (VmHWM at task end
+    less VmRSS at task start, a fresh worker per task, on an R-MAT graph
+    with a hub of 0.46M edge rows and three disjoint copies of it), well
+    under that price."""
+    return 3 * num_edge_rows * ROW_BYTES <= budget_bytes()
 
 
 def _rows(tag: int, a: np.ndarray, b: np.ndarray, c: np.ndarray):
@@ -87,14 +83,12 @@ def _task(batches, weighted: bool):
     )
 
 
-def build_one_task(
-    edges: DataFrame, partitions: int, weight_col: str | None
-) -> GraphTables:
+def build_one_task(edges: DataFrame, weight_col: str | None) -> GraphTables:
     """build_graph's tables, built in one task: nodes (id LONG, outdeg
     LONG, is_sink BOOLEAN) and adjacency (src, dst, w in the id layout)
     both read one checkpoint, which ``GraphTables.unpersist`` releases.
     One Spark job, the eager checkpoint, whose observed aggregates are the
-    counts; ``partitions`` only feeds the salt choice."""
+    counts."""
     weighted = weight_col is not None
     rows = edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long"),
@@ -128,5 +122,5 @@ def build_one_task(
             a.cast(id_t).alias("src"), b.cast(id_t).alias("dst"),
             c.cast(id_t).alias("w"),
         ),
-        id_t, partitions, checkpoint=out, **counts,
+        id_t, checkpoint=out, **counts,
     )

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from .. import DAMPING, NORTH_EPSILON
 from . import pagerank_task
-from .graph import GraphTables, build_graph
+from .graph import GraphTables, build_graph, release_checkpoint
 from .sweep import Sweeps, gather, iterate, node_state, sink_mass
 
 
@@ -327,12 +327,14 @@ def pagerank_personalized_batch(
                 F.lit(1.0 - damping) + F.lit(damping) * F.col("sm")
             ).alias("rank"),
         )
-        state = (
+        nxt = (
             contribs.unionAll(teleport)
             .groupBy("seed", "id")
             .agg(F.sum("rank").alias("rank"))
             .localCheckpoint(eager=True)
         )
+        release_checkpoint(state)  # spent: nxt no longer reads it
+        state = nxt
     if own_graph:
         g.unpersist()
     return state

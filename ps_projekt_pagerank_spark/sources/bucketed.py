@@ -18,7 +18,7 @@ stats pass. In exchange the crawl merge (streaming.crawl) writes one
 table and derives no nodes.
 
 The module is named for a ``bucketBy(src)`` layout that no plan used
-(the merge's full-outer join re-shuffles the store; the one-task load
+(the merge's (src, dst) sum re-shuffles the store; the one-task load
 reads it as one partition). The name, ``save_graph(g, name)`` and the
 (src, dst, w) columns stay because the benchmark (linkbench/) imports
 the one and reads the others.

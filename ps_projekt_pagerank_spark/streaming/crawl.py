@@ -8,16 +8,18 @@ the full edge file every run, Graph.cpp:44-103):
                 --> pagerank(init_ranks=previous)   (warm re-rank)
 
 The store is sources.bucketed's one plain parquet table of the weighted
-adjacency (src, dst, w). ``apply_edge_delta`` is the merge: the
-micro-batch collapses to weighted (src, dst, w) increments,
-full-outer-joins the stored adjacency, and the summed table replaces the
-store in one overwrite. Nothing else is written: node ids, out-degrees
-and sinks are rebuilt from the adjacency at load (``load_graph``).
+adjacency (src, dst, w). ``apply_edge_delta`` is the merge, and the
+first batch's merge is no different from the hundredth: the stored rows
+(none before the first batch) plus one w = 1 row per micro-batch edge
+are summed per (src, dst) — the update of a sum aggregate (CPiX, ICDE
+2023) — and the sum replaces the store in one overwrite. Nothing
+else is written: node ids, out-degrees and sinks are rebuilt from the
+adjacency at load (``load_graph``).
 
 ``stream_maintain_graph`` drives it from a Structured Streaming source
-via foreachBatch — the scale-correct replacement for the complete-mode
-memory-sink aggregations in streaming.edges (which remain as the
-batch-vs-stream equality test scaffolding).
+via foreachBatch; tests/test_incremental_bucketed.py checks that the
+stream-maintained store loads as exactly the graph a batch build of the
+same edges gives.
 
 ``incremental_rerank`` closes the loop: load the maintained store and
 warm-start PageRank from the previous rank vector — convergence in a
@@ -28,78 +30,60 @@ cold batch rebuild).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph import id_layout, release_checkpoint
 from ..operators.pagerank import PageRankResult, pagerank
-from ..sources.bucketed import load_graph, save_graph
-
-
-def _table_exists(spark: SparkSession, name: str) -> bool:
-    return spark.catalog.tableExists(name)
+from ..sources.bucketed import load_graph
 
 
 def apply_edge_delta(
     spark: SparkSession, name: str, delta_edges: DataFrame
 ) -> None:
-    """Merge a batch of raw (src, dst) edges into store ``name``.
+    """Merge a batch of raw (src, dst) edges into store ``name``, creating
+    it when absent.
 
-    Creates the store when absent (the first micro-batch bootstraps it via
-    build_graph + save_graph). Ids must fit the stored id type — the
-    dictionary encoding guarantees density, so a delta id outside an
-    int32-narrowed store's range means the dictionary itself rolled over
-    2^31 and the store should be rebuilt wide: the merge fails before it
-    writes anything, instead of silently truncating. The merged adjacency
-    replaces the store in one overwrite, the merge's only write.
+    One sum over store ∪ batch: the stored rows and the batch's rows with
+    ``w = 1`` group by (src, dst) and sum ``w``, so every duplicate link
+    counts (Graph.cpp:94-97). The sum is held in an eager localCheckpoint,
+    whose action also observes the null-endpoint count and the id range;
+    the store is then written once, in ``graph.id_layout``'s width for
+    that range: ``int`` while every id fits, ``bigint`` once a batch
+    brings a wider id. A batch edge with a null endpoint raises
+    ValueError before anything is written.
     """
-    from ..operators.graph import INT_IDS, build_graph, release_checkpoint
-
-    if not _table_exists(spark, name):
-        g = build_graph(delta_edges)
-        save_graph(g, name)
-        g.unpersist()
-        return
-
-    cur = spark.read.table(name)
-    id_t = dict(cur.dtypes)["src"]
-
-    def as_id(c: str):
-        """Column ``c`` in the store's id type; an id outside an int32
-        store's range fails the merge's first action, before any write."""
-        col = F.col(c)
-        if id_t != "int":
-            return col.cast(id_t).alias(c)
-        return (
-            F.when(
-                ~col.between(*INT_IDS),
-                F.raise_error(F.lit(
-                    "delta ids exceed the store's int32 layout — rebuild "
-                    "the store with long ids before merging this delta"
-                )),
-            )
-            .otherwise(col.cast("int"))
-            .alias(c)
-        )
-
-    delta = (
-        delta_edges.select(as_id("src"), as_id("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").cast(id_t).alias("wd"))
-    )
+    cols = ("src", "dst", "w")
+    rows = delta_edges.select("src", "dst", F.lit(1).alias("w"))
+    if spark.catalog.tableExists(name):
+        rows = spark.read.table(name).select(*cols).unionAll(rows)
+    null_endpoint = F.col("src").isNull() | F.col("dst").isNull()
+    obs = Observation()
     merged = (
-        cur.join(delta, ["src", "dst"], "full_outer")
-        .select(
-            "src",
-            "dst",
-            (
-                F.coalesce("w", F.lit(0)) + F.coalesce("wd", F.lit(0))
-            ).cast(id_t).alias("w"),
+        rows.select(*(F.col(c).cast("long") for c in cols))
+        .groupBy("src", "dst")
+        .agg(F.sum("w").alias("w"))
+        .observe(
+            obs,
+            F.sum(F.when(null_endpoint, F.col("w"))).alias("nulls"),
+            F.least(F.min("src"), F.min("dst")).alias("lo"),
+            F.greatest(F.max("src"), F.max("dst")).alias("hi"),
         )
         # cut the dependency on the table being overwritten (Spark refuses
         # to overwrite a table still referenced by the write's own plan)
         .localCheckpoint(eager=True)
     )
-    merged.write.mode("overwrite").format("parquet").saveAsTable(name)
+    seen = obs.get
+    if seen["nulls"]:
+        release_checkpoint(merged)
+        raise ValueError(
+            f"{seen['nulls']} edge rows have a null endpoint; a graph's "
+            "node ids cannot be null"
+        )
+    id_t = id_layout(seen["lo"], seen["hi"])
+    merged.select(*(F.col(c).cast(id_t) for c in cols)).write.mode(
+        "overwrite"
+    ).format("parquet").saveAsTable(name)
     release_checkpoint(merged)
 
 
@@ -177,14 +161,15 @@ def apply_doc_delta(
     rest are flagged against it (same printf-key argmin as the batch
     dedup operators). Scale: one batch fingerprint projection, one
     |batch|-row join against the registry (fp-keyed), one append of the
-    new rows.
+    new rows. The returned frame is a localCheckpoint, which holds the
+    call's only persisted rows (graph.release_checkpoint drops them).
     """
     from ps_projekt_pagerank_spark.functions.text import fingerprint
 
     fp = docs.select(
         "doc_id", fingerprint(F.col("text")).alias("fp")
     )
-    if not _table_exists(spark, name):
+    if not spark.catalog.tableExists(name):
         spark.createDataFrame(
             [], "fp STRING, first_seen_doc_id LONG"
         ).write.format("parquet").saveAsTable(name)
@@ -217,5 +202,8 @@ def apply_doc_delta(
                 "is_duplicate"
             ),
         )
+        .localCheckpoint(eager=True)
     )
+    release_checkpoint(joined)
+    release_checkpoint(new_fp)
     return out

@@ -69,9 +69,8 @@ def _assert_same_on_both_paths(spark, make_edges, **kw):
 
 @pytest.mark.parametrize("case", list(CASES))
 def test_build_paths_agree(spark, case):
-    kw = {"partitions": 8} if case == "star" else {}
     fields, *_ = _assert_same_on_both_paths(
-        spark, lambda: edges_from_pairs(spark, CASES[case]), **kw
+        spark, lambda: edges_from_pairs(spark, CASES[case])
     )
     if case == "star":  # the hub engages the salted gather
         assert fields["salt_buckets"] > 1 and fields["max_dst_rows"] == 4000
@@ -102,8 +101,7 @@ def test_one_task_graph_fits_the_one_task_pagerank(spark):
     """m edge rows make at most 2m nodes and m adjacency rows: the largest
     edge list the build takes in one task, at its worst, still fits
     pagerank_task.fits; so does a graph actually built there."""
-    per_row = max(graph_task.EDGE_ROW_BYTES, 3 * pagerank_task.ROW_BYTES)
-    m = pagerank_task.budget_bytes() // per_row
+    m = pagerank_task.budget_bytes() // (3 * pagerank_task.ROW_BYTES)
     assert graph_task.fits(m) and not graph_task.fits(m + 1)
     worst = GraphTables(
         nodes=None, adj=None, num_nodes=2 * m, num_edges=m, num_sinks=0,
@@ -126,18 +124,27 @@ def _checkpoint_ids(df) -> set[int]:
 
 
 def test_rank_loops_release_their_checkpoints(spark):
-    """The sweep loop and the HITS/SALSA half-rounds release each state
-    they replace (graph.release_checkpoint): after a call, no new RDD is
-    left persisted but those its returned frame reads."""
+    """The sweep loop, the HITS/SALSA half-rounds and the batch PPR rounds
+    release each state they replace (graph.release_checkpoint): after a
+    call, no new RDD is left persisted but those its returned frame
+    reads."""
     from ps_projekt_pagerank_spark.operators.hits import hits
-    from ps_projekt_pagerank_spark.operators.pagerank import pagerank_fixed
+    from ps_projekt_pagerank_spark.operators.pagerank import (
+        pagerank_fixed,
+        pagerank_personalized_batch,
+    )
     from ps_projekt_pagerank_spark.operators.salsa import salsa
 
     g = build_graph(edges_from_pairs(spark, MINI_EDGES))
     try:
-        for op in (pagerank_fixed, hits, salsa):
+        for op, args in (
+            (pagerank_fixed, (10,)),
+            (hits, (3,)),
+            (salsa, (3,)),
+            (pagerank_personalized_batch, ([0, 3], 10)),
+        ):
             before = _persisted(spark)
-            out = op(None, 10 if op is pagerank_fixed else 3, graph=g)
+            out = op(None, *args, graph=g)
             assert _persisted(spark) <= before | _checkpoint_ids(out), op
     finally:
         g.unpersist()

@@ -2,6 +2,7 @@
 
 import contextlib
 import io
+from collections import Counter
 
 import pytest
 
@@ -10,7 +11,7 @@ from ps_projekt_pagerank_spark.operators import graph_task
 from ps_projekt_pagerank_spark.operators.graph import build_graph
 from ps_projekt_pagerank_spark.operators.pagerank import pagerank
 from ps_projekt_pagerank_spark.sources.bucketed import load_graph, save_graph
-from tests.test_graph_task import BUILDS, _contents, _persisted
+from tests.test_graph_task import BUILDS, _checkpoint_ids, _contents, _persisted
 from tests.test_pagerank_spark import edges_from_pairs
 
 
@@ -84,9 +85,11 @@ def test_bucketed_store_roundtrip_and_no_exchange(spark):
 
 def test_stream_maintained_store_plus_warm_start_equals_batch(spark, tmp_path):
     """The composed incremental-crawl path — edge stream, foreachBatch
-    MERGE into the bucketed store, load, warm-start re-rank — must land on
-    EXACTLY the ranks of a cold batch rebuild given the same warm start
-    (same input, same trajectory: agreement to 1e-6 proves the store
+    MERGE into the store, load, warm-start re-rank. The stream-maintained
+    store loads as exactly the graph a batch build of the same edges gives
+    (every GraphTables field, the node table and the adjacency), and the
+    re-rank lands on the ranks of that batch graph given the same warm
+    start (same input, same trajectory: agreement to 1e-6 proves the store
     maintenance is lossless; warm-vs-cold trajectory drift is covered by
     test_warm_start_converges_faster)."""
     from ps_projekt_pagerank_spark.streaming.crawl import (
@@ -110,9 +113,7 @@ def test_stream_maintained_store_plus_warm_start_equals_batch(spark, tmp_path):
     try:
         stream_maintain_graph(spark, d, "t_crawl_store")
         g_store = load_graph(spark, "t_crawl_store")
-        assert (g_store.num_nodes, g_store.num_edges, g_store.num_sinks) == (
-            g_batch.num_nodes, g_batch.num_edges, g_batch.num_sinks
-        )
+        assert _contents(g_store) == _contents(g_batch)
         g_store.unpersist()
         warm_inc = incremental_rerank(
             spark, "t_crawl_store", prev_ranks=prev.ranks, epsilon=1e-9
@@ -129,27 +130,49 @@ def test_stream_maintained_store_plus_warm_start_equals_batch(spark, tmp_path):
         g_batch.unpersist()
 
 
-def test_out_of_range_delta_fails_before_any_write(spark):
-    """A delta id outside an int32 store's range, above or below it,
-    fails the merge with an error naming the int32 layout, and the store
-    is left as it was."""
+def _store_rows(spark, name):
+    return sorted(tuple(r) for r in spark.read.table(name).collect())
+
+
+def test_wide_delta_widens_the_store(spark):
+    """A delta id outside the int32 range, above or below it, widens an
+    ``int`` store to ``bigint``, and the store stays edge-exact."""
     from ps_projekt_pagerank_spark.streaming.crawl import apply_edge_delta
 
     name = "t_narrow_store"
+    base = list(FIXTURE_GRAPHS["mini"])
+    try:
+        for wide in (2**31, -(2**31) - 1):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            apply_edge_delta(spark, name, edges_from_pairs(spark, base))
+            assert dict(spark.read.table(name).dtypes)["src"] == "int"
+            delta = [(0, 1), (wide, 0)]
+            apply_edge_delta(spark, name, edges_from_pairs(spark, delta))
+            assert dict(spark.read.table(name).dtypes)["src"] == "bigint"
+            want = Counter(base + delta)
+            assert _store_rows(spark, name) == sorted(
+                (s, d, w) for (s, d), w in want.items()
+            ), wide
+            g = load_graph(spark, name)
+            assert g.id_type == "long", wide
+            g.unpersist()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
-    def store():
-        return sorted(tuple(r) for r in spark.read.table(name).collect())
 
+def test_null_endpoint_delta_fails_before_any_write(spark):
+    """A delta edge with a null endpoint fails the merge with the
+    builders' ValueError, and the store is left as it was."""
+    from ps_projekt_pagerank_spark.streaming.crawl import apply_edge_delta
+
+    name = "t_null_store"
     try:
         apply_edge_delta(spark, name, edges_from_pairs(spark, FIXTURE_GRAPHS["mini"]))
-        assert dict(spark.read.table(name).dtypes)["src"] == "int"
-        assert not spark.catalog.tableExists(name + "_nodes")
-        before = store()
-        for bad in (2**31, -(2**31) - 1):
-            delta = edges_from_pairs(spark, [(0, 1), (bad, 0)])
-            with pytest.raises(Exception, match="int32 layout"):
-                apply_edge_delta(spark, name, delta)
-            assert store() == before, bad
+        before = _store_rows(spark, name)
+        delta = spark.createDataFrame([(0, None), (1, 0)], "src LONG, dst LONG")
+        with pytest.raises(ValueError, match="1 edge rows have a null endpoint"):
+            apply_edge_delta(spark, name, delta)
+        assert _store_rows(spark, name) == before
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
@@ -216,26 +239,29 @@ def test_incremental_doc_dedup_registry(spark):
     registry grows by distinct content only."""
     from ps_projekt_pagerank_spark.streaming.crawl import apply_doc_delta
 
+    def apply(batch):
+        """apply_doc_delta's rows; the call leaves no RDD persisted but
+        those its returned frame reads."""
+        before = _persisted(spark)
+        out = apply_doc_delta(spark, "t_fp_reg", batch)
+        assert _persisted(spark) <= before | _checkpoint_ids(out)
+        return {
+            r["doc_id"]: (r["is_duplicate"], r["first_seen_doc_id"])
+            for r in out.collect()
+        }
+
     try:
         b1 = spark.createDataFrame(
             [(0, "alpha beta"), (1, "gamma"), (2, "alpha beta")],
             "doc_id LONG, text STRING",
         )
-        r1 = {
-            r["doc_id"]: (r["is_duplicate"], r["first_seen_doc_id"])
-            for r in apply_doc_delta(spark, "t_fp_reg", b1).collect()
-        }
-        assert r1 == {0: (False, 0), 1: (False, 1), 2: (True, 0)}
+        assert apply(b1) == {0: (False, 0), 1: (False, 1), 2: (True, 0)}
         # batch 2: re-crawl of doc 0's content + genuinely new content
         b2 = spark.createDataFrame(
             [(10, "alpha beta"), (11, "delta")],
             "doc_id LONG, text STRING",
         )
-        r2 = {
-            r["doc_id"]: (r["is_duplicate"], r["first_seen_doc_id"])
-            for r in apply_doc_delta(spark, "t_fp_reg", b2).collect()
-        }
-        assert r2 == {10: (True, 0), 11: (False, 11)}
+        assert apply(b2) == {10: (True, 0), 11: (False, 11)}
         assert spark.read.table("t_fp_reg").count() == 3  # distinct contents
     finally:
         spark.sql("DROP TABLE IF EXISTS t_fp_reg")
