@@ -15,9 +15,10 @@ shuffle-aware, by the steps below. Both give the same tables:
   the reference's build-once CSR (Graph4CL.cpp:16-46). The distributed
   build repartitions it ONCE by src and persists it, so per-iteration
   shuffles touch only the |V|-row rank state, never the |E|-row edge
-  table; the one-task build leaves it as ONE partition in (src, dst)
-  order, which the sweep loop re-shuffles every sweep once the state is
-  too large to broadcast. Under the session's 64 MB
+  table; the one-task build keeps it packed (the CSR itself) and unpacks
+  it as ONE persisted partition in (src, dst) order when rows are read,
+  which the sweep loop re-shuffles every sweep once the state is too
+  large to broadcast. Under the session's 64 MB
   ``autoBroadcastJoinThreshold`` Catalyst broadcasts the rank state
   instead; the driver builds that broadcast in its heap every sweep, and
   on an R-MAT scale-22 graph (943k nodes) under a 2g heap it fails with
@@ -46,7 +47,8 @@ class GraphTables:
     """Build-once, iterate-many graph state (analogue of reference CSR)."""
 
     nodes: DataFrame  # id LONG, outdeg LONG, is_sink BOOLEAN (persisted)
-    adj: DataFrame  # src, dst, w in id_type (persisted, hash-part. src)
+    adj: DataFrame  # src, dst, w in id_type (persisted; hash-part. src or
+    # one partition, a view of ``checkpoint``)
     num_nodes: int
     num_edges: int  # multigraph edge count (sum of w)
     num_sinks: int
@@ -54,7 +56,8 @@ class GraphTables:
     id_type: str = "long"  # narrow int layout when every id fits int32
     salt_buckets: int = 1  # auto-chosen from the in-degree distribution
     max_dst_rows: int = 0  # adjacency rows into the hottest dst
-    # the one-task build's checkpoint, which nodes and adj both read
+    # the one-task build's checkpoint: the graph packed as
+    # operators.pagerank_task reads it; nodes and adj are views of it
     checkpoint: DataFrame | None = None
 
     def unpersist(self) -> None:
@@ -132,8 +135,9 @@ def build_graph(edges: DataFrame, weight_col: str | None = None) -> GraphTables:
 
     An edge list whose row count fits one task's memory budget
     (``graph_task.fits``) is built in one task (operators.graph_task):
-    two Spark jobs, the row count and one eager checkpoint, and the
-    adjacency is one partition. A larger one is built here by Spark's
+    two Spark jobs, the row count and one eager checkpoint of the packed
+    graph, whose node and adjacency rows (the adjacency one partition)
+    are unpacked when first read. A larger one is built here by Spark's
     workers, with the adjacency hash-partitioned by src into the
     session's ``spark.sql.shuffle.partitions``. Either way that count is
     the partition count the salt choice divides the gather input by; at
@@ -246,8 +250,8 @@ def counted_graph_tables(
     adj: DataFrame,
     id_type: str,
     *,
-    num_nodes: int,
-    num_sinks: int,
+    num_nodes: int | None,
+    num_sinks: int | None,
     num_edges: int | None,
     num_adj_rows: int | None,
     max_dst_rows: int | None,
@@ -264,7 +268,7 @@ def counted_graph_tables(
     return GraphTables(
         nodes=nodes,
         adj=adj,
-        num_nodes=int(num_nodes),
+        num_nodes=int(num_nodes or 0),
         num_edges=int(num_edges or 0),
         num_sinks=int(num_sinks or 0),
         num_adj_rows=num_adj_rows,

@@ -6,18 +6,24 @@ The reference builds its graph in one sequential pass over the edge file
 distributed build (operators.graph.build_graph) pays a Spark plan per
 table and per count, a fixed cost that outweighs the row work as long as
 the edge list fits one machine. Here the edge rows reach one task
-(``coalesce(1).mapInArrow``), which derives the node ids and out-degrees
-with operators.pagerank_task's own helpers, collapses duplicate
-(src, dst) rows into one weighted row, and emits the node and adjacency
-tables as one tagged union. One eager localCheckpoint of that union is
+(``coalesce(1).mapInArrow``), which derives the node ids and
+out-degrees, collapses duplicate (src, dst) rows into one weighted row,
+and emits the graph packed the way operators.pagerank_task reads it: the
+node ids, the out-degrees and the collapsed adjacency as node indices
+plus ``w``, each cut into slices of at most ``CHUNK`` entries, one
+binary row per slice. One eager localCheckpoint of those few rows is
 the build's only pass over the edges; the GraphTables counts are
 observed on the same action.
 
-The adjacency is ONE partition in (src, dst) order, not hash-partitioned
-by src. That costs the sweep loop (operators.sweep) nothing while it
-broadcasts the |V|-row rank state, i.e. while the state is under the
-session's 64 MB ``autoBroadcastJoinThreshold`` — about 2M nodes. On a
-larger graph the scatter join re-shuffles this adjacency every sweep.
+The node and adjacency tables are row views of that checkpoint,
+unpacked by one more task and persisted the first time something reads
+them (the sweep loop, ``save_graph``); the one-task PageRank reads the
+packed rows and never materializes them. The adjacency view is ONE
+partition in (src, dst) order, not hash-partitioned by src. That costs
+the sweep loop (operators.sweep) nothing while it broadcasts the
+|V|-row rank state, i.e. while the state is under the session's 64 MB
+``autoBroadcastJoinThreshold`` — about 2M nodes. On a larger graph the
+scatter join re-shuffles this adjacency every sweep.
 """
 
 from __future__ import annotations
@@ -28,15 +34,25 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from .graph import GraphTables, counted_graph_tables, id_layout
-from .pagerank_task import ROW_BYTES, arrow_columns, budget_bytes, node_index
+from .pagerank_task import ADJ, NODES, PACKED, ROW_BYTES, arrow_columns, budget_bytes
 
-# tag 0: a node (a = id, b = outdeg, c = adjacency rows into it);
-# tag 1: an adjacency row (a = src, b = dst, c = w)
-_OUT = pa.schema([("tag", pa.int8()), ("a", pa.int64()), ("b", pa.int64()),
-                  ("c", pa.int64())])
-_OUT_DDL = "tag TINYINT, a LONG, b LONG, c LONG"
+# Entries per packed slice: 2 MB of int64 a binary value, so one row
+# stays small for the JVM however large the graph
+CHUNK = 1 << 18
+
+# the packed rows; the first row also carries the GraphTables counts
+_COUNTS = ("num_nodes", "num_sinks", "min_id", "max_id", "n_dst",
+           "max_dst_rows", "num_adj_rows", "num_edges")
+_ARRAYS = [c for cols in PACKED.values() for c in cols]
+_OUT = pa.schema([("tag", pa.int8()), *((c, pa.binary()) for c in _ARRAYS),
+                  *((k, pa.int64()) for k in _COUNTS)])
+_OUT_DDL = ", ".join(
+    ["tag TINYINT", *(f"{c} BINARY" for c in _ARRAYS),
+     *(f"{k} LONG" for k in _COUNTS)]
+)
 
 
 def fits(num_edge_rows: int) -> bool:
@@ -52,17 +68,32 @@ def fits(num_edge_rows: int) -> bool:
     return 3 * num_edge_rows * ROW_BYTES <= budget_bytes()
 
 
-def _rows(tag: int, a: np.ndarray, b: np.ndarray, c: np.ndarray):
-    return pa.Table.from_arrays(
-        [pa.array(np.full(len(a), tag, np.int8)), pa.array(a), pa.array(b),
-         pa.array(c)], schema=_OUT,
-    ).to_batches(max_chunksize=1 << 16)
+def node_index(src: np.ndarray, dst: np.ndarray, w: np.ndarray):
+    """G1 and G2 over edge arrays: the node ids (the sorted distinct
+    endpoints), ``src`` and ``dst`` as indices into them, and each node's
+    out-degree, the exact integer sum of ``w`` over its out-edges."""
+    m = len(src)
+    ids, index = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    outdeg = np.zeros(len(ids), np.int64)
+    np.add.at(outdeg, index[:m], w)
+    return ids, index[:m], index[m:], outdeg
 
 
-def _task(batches, weighted: bool):
-    """mapInArrow body: the whole build over the edge rows. Yields a node
-    row per node in id order, then an adjacency row per distinct
-    (src, dst) pair in (src, dst) order."""
+def _slices(tag: int, chunk: int, **arrays: np.ndarray) -> list[dict]:
+    """Packed rows of ``tag``: ``arrays`` (of one length) cut into slices
+    of ``chunk`` entries, a row per slice."""
+    n = len(next(iter(arrays.values())))
+    return [
+        {"tag": tag, **{c: a[lo:lo + chunk].astype("<i8").tobytes()
+                        for c, a in arrays.items()}}
+        for lo in range(0, n, chunk)
+    ]
+
+
+def _task(batches, weighted: bool, chunk: int):
+    """mapInArrow body: the whole build over the edge rows. Yields the
+    node slices in id order, then the adjacency slices in (src, dst)
+    order, one row per batch."""
     names = ("src", "dst", "w") if weighted else ("src", "dst")
     cols = arrow_columns(batches, {None: names})
     m = len(cols["src"])
@@ -77,50 +108,82 @@ def _task(batches, weighted: bool):
     key = key[order]
     first = np.flatnonzero(np.diff(key, prepend=-1))
     pair_src, pair_dst = np.divmod(key[first], n)
-    yield from _rows(0, ids, outdeg, np.bincount(pair_dst, minlength=n))
-    yield from _rows(
-        1, ids[pair_src], ids[pair_dst], np.add.reduceat(w[order], first)
+    in_rows = np.bincount(pair_dst, minlength=n)
+    rows = _slices(NODES, chunk, ids=ids, outdeg=outdeg) + _slices(
+        ADJ, chunk, src=pair_src, dst=pair_dst,
+        w=np.add.reduceat(w[order], first),
+    )
+    counts = (n, np.count_nonzero(outdeg == 0), ids[0], ids[-1],  # G4
+              np.count_nonzero(in_rows), in_rows.max(), len(first), w.sum())
+    rows[0].update(zip(_COUNTS, map(int, counts)))
+    for row in rows:
+        yield pa.RecordBatch.from_pylist([row], schema=_OUT)
+
+
+def _pack(rows: DataFrame, weighted: bool) -> DataFrame:
+    """The build task over edge ``rows`` (src, dst[, w] as LONG)."""
+    task = partial(_task, weighted=weighted, chunk=CHUNK)
+    return rows.coalesce(1).mapInArrow(task, _OUT_DDL)
+
+
+def packed(g: GraphTables) -> DataFrame:
+    """``g`` as packed rows: the one-task build's checkpoint, or, for a
+    graph built on Spark's workers, its adjacency packed by the build
+    task (weighted by ``w``), unmaterialized."""
+    if g.checkpoint is not None:
+        return g.checkpoint
+    return _pack(
+        g.adj.select(*(F.col(c).cast("long") for c in ("src", "dst", "w"))),
+        weighted=True,
     )
 
 
+def _node_rows(batches):
+    """mapInArrow body: the node table of the packed rows."""
+    cols = arrow_columns(batches, {NODES: ("ids", "outdeg")})
+    yield from pa.Table.from_pydict({
+        "id": cols["ids"], "outdeg": cols["outdeg"],
+        "is_sink": cols["outdeg"] == 0,
+    }).to_batches(max_chunksize=1 << 16)
+
+
+def _adj_rows(batches):
+    """mapInArrow body: the adjacency table of the packed rows, its node
+    indices mapped back to ids."""
+    cols = arrow_columns(batches, {NODES: ("ids",), ADJ: ("src", "dst", "w")})
+    ids = cols["ids"]
+    yield from pa.Table.from_pydict({
+        "src": ids[cols["src"]], "dst": ids[cols["dst"]], "w": cols["w"],
+    }).to_batches(max_chunksize=1 << 16)
+
+
 def build_one_task(edges: DataFrame, weight_col: str | None) -> GraphTables:
-    """build_graph's tables, built in one task: nodes (id LONG, outdeg
-    LONG, is_sink BOOLEAN) and adjacency (src, dst, w in the id layout)
-    both read one checkpoint, which ``GraphTables.unpersist`` releases.
-    One Spark job, the eager checkpoint, whose observed aggregates are the
-    counts."""
+    """build_graph's tables, built in one task and kept packed in one
+    checkpoint, which ``GraphTables.unpersist`` releases. The nodes
+    (id LONG, outdeg LONG, is_sink BOOLEAN) and the adjacency (src, dst,
+    w in the id layout) are persisted row views of it, materialized by
+    their first reader. One Spark job, the eager checkpoint, whose
+    observed aggregates are the counts."""
     weighted = weight_col is not None
     rows = edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long"),
         *([F.col(weight_col).cast("long").alias("w")] if weighted else []),
     )
-    node, a, b, c = F.col("tag") == 0, F.col("a"), F.col("b"), F.col("c")
     obs = Observation()
     out = (
-        rows.coalesce(1)
-        .mapInArrow(partial(_task, weighted=weighted), _OUT_DDL)
-        .observe(
-            obs,
-            F.count(F.when(node, 1)).alias("num_nodes"),
-            F.count(F.when(node & (b == 0), 1)).alias("num_sinks"),
-            F.min(F.when(node, a)).alias("min_id"),
-            F.max(F.when(node, a)).alias("max_id"),
-            F.count(F.when(node & (c > 0), 1)).alias("n_dst"),
-            F.max(F.when(node, c)).alias("max_dst_rows"),
-            F.count(F.when(~node, 1)).alias("num_adj_rows"),
-            F.sum(F.when(~node, c)).alias("num_edges"),
-        )
+        _pack(rows, weighted)
+        .observe(obs, *(F.max(k).alias(k) for k in _COUNTS))
         .localCheckpoint(eager=True)
     )
     counts = obs.get
     id_t = id_layout(counts.pop("min_id"), counts.pop("max_id"))
-    return counted_graph_tables(
-        out.where(node).select(
-            a.alias("id"), b.alias("outdeg"), (b == 0).alias("is_sink")
-        ),
-        out.where(~node).select(
-            a.cast(id_t).alias("src"), b.cast(id_t).alias("dst"),
-            c.cast(id_t).alias("w"),
-        ),
-        id_t, checkpoint=out, **counts,
+    level = StorageLevel.MEMORY_AND_DISK
+    nodes = out.mapInArrow(
+        _node_rows, "id LONG, outdeg LONG, is_sink BOOLEAN"
+    ).persist(level)
+    adj = (
+        out.mapInArrow(_adj_rows, "src LONG, dst LONG, w LONG")
+        .select(*(F.col(c).cast(id_t) for c in ("src", "dst", "w")))
+        .persist(level)
     )
+    return counted_graph_tables(nodes, adj, id_t, checkpoint=out, **counts)

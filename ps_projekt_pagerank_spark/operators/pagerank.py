@@ -1,9 +1,9 @@
 """P1-P7 — iterative PageRank with the reference's exact semantics
 (reference sequential loop: src/Graph.cpp:118-173; formula Naloga4.pdf p.1),
 run one of two ways. A graph that fits one task's memory runs the
-reference's sequential loop itself, as NumPy inside one Arrow task
-(operators.pagerank_task). A larger graph, or a checkpointed call, runs a
-driver-side while-loop over DataFrame gather/scatter — the Spark idiom for
+reference's sequential loop itself, as NumPy over the packed graph inside
+one Arrow task (operators.pagerank_task). A larger graph, or a
+checkpointed call, runs a driver-side while-loop over DataFrame gather/scatter — the Spark idiom for
 the reference's host-driven GPU loop (Graph4CL.cpp:112-206, which likewise
 collects a scalar per iteration and re-injects it).
 
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import DAMPING, NORTH_EPSILON
-from . import pagerank_task
+from . import graph_task, pagerank_task
 from .graph import GraphTables, build_graph, release_checkpoint
 from .sweep import Sweeps, gather, iterate, node_state, sink_mass
 
@@ -86,9 +86,12 @@ def pagerank(
     in-degree distribution (``graph.salt_buckets``; 1 on uniform graphs).
 
     Graphs that fit one task's memory budget (``pagerank_task.fits``)
-    run every sweep in one task (``pagerank_task``): two Spark jobs per
-    call. Larger graphs, and every call with a ``checkpointer``, run the
-    distributed sweep (operators.sweep): one job per sweep.
+    run every sweep in one task (``pagerank_task``) over the packed
+    graph (``graph_task.packed``; a graph built on Spark's workers is
+    packed in that same task): one Spark job per call, which leaves a
+    one-task graph's node and adjacency rows unmaterialized. Larger
+    graphs, and every call with a ``checkpointer``, run the distributed
+    sweep (operators.sweep): one job per sweep.
 
     ``checkpointer`` (sources.checkpoint.IterationCheckpointer) durably
     writes rank vectors + metrics after every sweep and enables resume;
@@ -105,7 +108,8 @@ def pagerank(
             return PageRankResult(ranks=ranks, iterations=0)
         if checkpointer is None and pagerank_task.fits(g):
             ranks, metrics = pagerank_task.pagerank_one_task(
-                g, init_ranks, damping, epsilon, max_iterations
+                graph_task.packed(g), g, init_ranks, damping, epsilon,
+                max_iterations,
             )
             sweeps = len(metrics)
             n_active = metrics[-1]["n_active"] if metrics else n

@@ -1,16 +1,18 @@
 """Frozen-node PageRank (P1-P7 of operators.pagerank) in ONE task, for
 graphs whose adjacency fits one Python worker's memory.
 
-The reference ranks a graph with one sequential loop (Graph.cpp:118-173).
-The distributed sweep (operators.sweep) pays one Spark plan and one eager
-checkpoint per sweep, a fixed cost that outweighs the row work as long as
-the graph fits one machine. Here the adjacency rows, and the start ranks
-of a warm start, reach one task as a tagged union
-(``coalesce(1).mapInArrow``); the task derives the node ids and
-out-degrees from the adjacency (the node set is the set of edge
-endpoints, G1), runs every sweep over dense NumPy arrays, and one eager
-localCheckpoint of its output — the ranks plus one record per sweep — is
-the call's only pass over the graph.
+The reference packs its graph as CSR once and then ranks it with one
+sequential loop over the packed arrays (Graph4CL.cpp:16-46,
+Graph.cpp:118-173). The distributed sweep (operators.sweep) pays one
+Spark plan and one eager checkpoint per sweep, a fixed cost that
+outweighs the row work as long as the graph fits one machine. Here the
+graph reaches one task (``coalesce(1).mapInArrow``) as the packed arrays
+operators.graph_task builds — node ids, out-degrees and the collapsed
+adjacency as node indices plus ``w``, a few binary rows — together with
+the start ranks of a warm start, tagged into the same union. The task
+runs every sweep over dense NumPy arrays; one eager localCheckpoint of
+its output, the ranks, is the call's only Spark job, and the per-sweep
+records come back as an Observation on that same action.
 
 This module shares no code with oracle/: the gate compares the two, which
 only means something while they are independent implementations.
@@ -24,26 +26,37 @@ from functools import partial
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..session import mem_total_bytes
 from .graph import GraphTables
 
 # Bytes the task's Python worker may add per node plus adjacency row. Its
-# peak RSS (VmHWM at task end less VmRSS at task start) was measured on
-# R-MAT graphs of 0.7M and 1.9M such rows: 129-147 bytes a row cold,
-# 139-158 warm-started, about 120 bytes a row at the margin plus ~35 MB
-# fixed; 200 leaves a quarter or more of headroom over those
+# peak RSS on packed input (VmHWM at task end less VmRSS at task start, a
+# fresh Python process fed the task's Arrow input from a file and keeping
+# its whole Arrow output) was measured on R-MAT graphs with a hub of
+# 0.68M and 1.94M such rows: 137 and 92 bytes a row cold, 141 and 92
+# warm-started, about 70 a row at the margin plus ~45 MB fixed; 200
+# leaves 40% or more of headroom over those
 ROW_BYTES = 200
 
-_IN = {"id": "long", "rank": "double", "src": "long", "dst": "long", "w": "long"}
-_INIT, _ADJ = ("id", "rank"), ("src", "dst", "w")
-_OUT = pa.schema([("tag", pa.int8()), ("id", pa.int64()), ("rank", pa.float64()),
-                  ("iteration", pa.int32()), ("seconds", pa.float64()),
-                  ("n_active", pa.int64())])
-_OUT_DDL = ("tag TINYINT, id LONG, rank DOUBLE, iteration INT, "
-            "seconds DOUBLE, n_active LONG")
+# A packed graph, as operators.graph_task writes it: each row holds one
+# slice of the node arrays (tag NODES: ``ids``, sorted, and ``outdeg``) or
+# of the collapsed adjacency's (tag ADJ: ``src`` and ``dst`` as indices
+# into the ids, and ``w``), little-endian int64 bytes, slices in order.
+# The rank task's input adds one row per start rank (tag INIT: id, rank).
+NODES, ADJ, INIT = 0, 1, 2
+PACKED = {NODES: ("ids", "outdeg"), ADJ: ("src", "dst", "w")}
+# The task's output: a rank row per node, then one row (id null) whose
+# ``sweeps`` lists the per-sweep records. A rank row carries nothing else:
+# each further column costs the JVM more per call than all the sweeps.
+_SWEEP = pa.struct([("iteration", pa.int32()), ("seconds", pa.float64()),
+                    ("n_active", pa.int64())])
+_OUT = pa.schema([("id", pa.int64()), ("rank", pa.float64()),
+                  ("sweeps", pa.list_(_SWEEP))])
+_OUT_DDL = ("id LONG, rank DOUBLE, "
+            "sweeps ARRAY<STRUCT<iteration: INT, seconds: DOUBLE, n_active: LONG>>")
 
 
 def budget_bytes(meminfo: str = "/proc/meminfo") -> int:
@@ -96,30 +109,28 @@ def frozen_sweeps(
     return rank, records
 
 
+def _values(col: pa.Array) -> np.ndarray:
+    """``col`` as NumPy; a BINARY column's packed int64 slices joined."""
+    if pa.types.is_binary(col.type):
+        return np.frombuffer(b"".join(col.to_pylist()), "<i8")
+    return col.to_numpy(zero_copy_only=False)
+
+
 def arrow_columns(batches, parts: dict) -> dict[str, np.ndarray]:
     """The named columns of Arrow ``batches`` as NumPy arrays, each
-    concatenated over all batches. ``parts`` maps a tag to the columns
-    read from the rows carrying that tag; tag None reads every row (the
-    batches then need no tag column)."""
+    concatenated over all batches in row order. ``parts`` maps a tag to
+    the columns read from the rows carrying that tag; tag None reads
+    every row (the batches then need no tag column). A column the
+    batches lack reads as empty."""
     got: dict[str, list] = {c: [] for cols in parts.values() for c in cols}
     for b in batches:
         for tag, cols in parts.items():
             rows = b if tag is None else b.filter(pc.equal(b.column("tag"), tag))
             for c in cols:
-                got[c].append(rows.column(c).to_numpy(zero_copy_only=False))
+                if c in rows.schema.names:
+                    got[c].append(_values(rows.column(c)))
     return {c: np.concatenate(v) if v else np.empty(0, np.int64)
             for c, v in got.items()}
-
-
-def node_index(src: np.ndarray, dst: np.ndarray, w: np.ndarray):
-    """G1 and G2 over edge arrays: the node ids (the sorted distinct
-    endpoints), ``src`` and ``dst`` as indices into them, and each node's
-    out-degree, the exact integer sum of ``w`` over its out-edges."""
-    m = len(src)
-    ids, index = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    outdeg = np.zeros(len(ids), np.int64)
-    np.add.at(outdeg, index[:m], w)
-    return ids, index[:m], index[m:], outdeg
 
 
 def _start_ranks(ids: np.ndarray, init_id: np.ndarray, init_rank: np.ndarray):
@@ -137,68 +148,63 @@ def _start_ranks(ids: np.ndarray, init_id: np.ndarray, init_rank: np.ndarray):
 
 def _task(batches, num_nodes: int, damping: float, epsilon: float,
           max_iterations: int):
-    """mapInArrow body: the whole frozen-node loop over the union's rows.
-    Yields a rank row (tag 0) per node, then a record row (tag 1) per
-    sweep."""
-    cols = arrow_columns(batches, {0: _INIT, 1: _ADJ})
-    if not len(cols["src"]):
+    """mapInArrow body: the whole frozen-node loop over the packed graph
+    and the start ranks. Yields a rank row per node, then the row of
+    per-sweep records."""
+    cols = arrow_columns(batches, {**PACKED, INIT: ("id", "rank")})
+    ids = cols["ids"]
+    if not len(ids):
         raise ValueError("the one-task PageRank received no rows")
-    ids, src, dst, outdeg = node_index(cols["src"], cols["dst"], cols["w"])
     if len(ids) != num_nodes:
         raise ValueError(
-            f"the adjacency holds {len(ids)} node ids, the graph {num_nodes}"
+            f"the packed adjacency holds {len(ids)} node ids, the graph "
+            f"{num_nodes}"
         )
     rank, records = frozen_sweeps(
-        outdeg, _start_ranks(ids, cols["id"], cols["rank"]),
-        src, dst, cols["w"], damping, epsilon, max_iterations,
+        cols["outdeg"], _start_ranks(ids, cols["id"], cols["rank"]),
+        cols["src"], cols["dst"], cols["w"], damping, epsilon, max_iterations,
     )
-    n, k = len(ids), len(records)
-    rec = np.array(records, dtype=np.float64).reshape(k, 3)
-    yield from pa.Table.from_arrays([
-        pa.array(np.zeros(n, np.int8)), pa.array(ids), pa.array(rank),
-        pa.nulls(n, pa.int32()), pa.nulls(n, pa.float64()),
-        pa.nulls(n, pa.int64()),
-    ], schema=_OUT).to_batches(max_chunksize=1 << 16)
-    yield pa.RecordBatch.from_arrays([
-        pa.array(np.ones(k, np.int8)), pa.nulls(k, pa.int64()),
-        pa.nulls(k, pa.float64()), pa.array(rec[:, 0].astype(np.int32)),
-        pa.array(rec[:, 1]), pa.array(rec[:, 2].astype(np.int64)),
-    ], schema=_OUT)
-
-
-def _tagged(df: DataFrame, tag: int) -> DataFrame:
-    """``df``'s columns of the union, in its layout; null where absent."""
-    return df.select(
-        F.lit(tag).cast("byte").alias("tag"),
-        *[(F.col(c) if c in df.columns else F.lit(None)).cast(t).alias(c)
-          for c, t in _IN.items()],
+    no_sweeps = pa.nulls(len(ids), _OUT.field("sweeps").type)
+    yield from pa.Table.from_arrays(
+        [pa.array(ids), pa.array(rank), no_sweeps], schema=_OUT
+    ).to_batches(max_chunksize=1 << 16)
+    sweeps = [dict(zip([f.name for f in _SWEEP], r)) for r in records]
+    yield pa.RecordBatch.from_pylist(
+        [{"id": None, "rank": None, "sweeps": sweeps}], schema=_OUT
     )
 
 
 def pagerank_one_task(
+    packed: DataFrame,
     g: GraphTables,
     init_ranks: DataFrame | None,
     damping: float,
     epsilon: float,
     max_iterations: int,
 ) -> tuple[DataFrame, list[dict]]:
-    """Run the frozen-node loop over ``g.adj`` in one task, from 1/N or
-    from ``init_ranks`` (id, rank; nodes it lacks, or whose rank is null,
-    start at 1/N). Returns the ranks (id LONG, rank DOUBLE), checkpointed,
-    and one record per sweep (iteration, edges, seconds, n_active) — the
-    sweep loop's records. Two Spark jobs: the eager checkpoint and the
-    read of the records."""
-    rows = _tagged(g.adj, 1)
+    """Run the frozen-node loop over ``packed``, graph ``g`` as packed
+    rows (graph_task.packed), in one task, from 1/N or from
+    ``init_ranks`` (id, rank; nodes it lacks, or whose rank is null,
+    start at 1/N). Returns the ranks (id LONG, rank DOUBLE),
+    checkpointed, and one record per sweep (iteration, edges, seconds,
+    n_active) — the sweep loop's records. One Spark job, the eager
+    checkpoint, on whose action the records are observed."""
+    rows = packed
     if init_ranks is not None:
-        init = init_ranks.select("id", "rank").where(F.col("rank").isNotNull())
-        rows = _tagged(init, 0).unionAll(rows)
+        init = init_ranks.select(
+            F.lit(INIT).cast("byte").alias("tag"), F.col("id").cast("long"),
+            F.col("rank").cast("double"),
+        ).where(F.col("rank").isNotNull())
+        rows = rows.unionByName(init, allowMissingColumns=True)
     task = partial(_task, num_nodes=g.num_nodes, damping=damping,
                    epsilon=epsilon, max_iterations=max_iterations)
-    out = rows.coalesce(1).mapInArrow(task, _OUT_DDL).localCheckpoint(eager=True)
-    records = sorted(
-        ({"iteration": r["iteration"], "edges": g.num_edges,
-          "seconds": r["seconds"], "n_active": r["n_active"]}
-         for r in out.where(F.col("tag") == 1).collect()),
-        key=lambda m: m["iteration"],
+    obs = Observation()
+    # the task's output is checkpointed as it comes: a filter in front of
+    # the checkpoint costs more CPU than it saves its readers
+    out = (
+        rows.coalesce(1).mapInArrow(task, _OUT_DDL)
+        .observe(obs, F.first("sweeps", ignorenulls=True).alias("sweeps"))
+        .localCheckpoint(eager=True)
     )
-    return out.where(F.col("tag") == 0).select("id", "rank"), records
+    records = [dict(r.asDict(), edges=g.num_edges) for r in obs.get["sweeps"]]
+    return out.where(F.col("id").isNotNull()).select("id", "rank"), records

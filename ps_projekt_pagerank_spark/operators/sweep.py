@@ -22,7 +22,8 @@ checkpointed one on purpose — a metrics node behind the checkpoint's RDD
 boundary would never publish.
 
 Scale shape: the |E|-row adjacency is laid out ONCE (build_graph: hash-
-partitioned by src, or one partition when the one-task build made it);
+partitioned by src, or one cached partition unpacked from the one-task
+build's packed graph);
 each sweep moves only the |V|-row state. A one-partition adjacency runs
 the scatter join and the partial gather in one task, and is re-shuffled
 every sweep once the state is too large to broadcast. When the

@@ -21,13 +21,16 @@ def total_rank(ranks: DataFrame) -> float:
 def top_bottom_k(ranks: DataFrame, edges: DataFrame, k: int = 10) -> DataFrame:
     """R2+R3 — k highest and k lowest ranked nodes with in-link counts.
 
+    Every duplicate link counts (main.cpp:228-241): a weighted
+    (src, dst, w) frame — a built adjacency, the crawl store — stands
+    for ``w`` links per row, so its in-link count sums ``w``.
+
     Deterministic: ties broken by id, like a stable re-run of the
     reference's sort (main.cpp:13-14 sorts by rank only; id tiebreak makes
     the distributed result reproducible).
     """
-    indeg = edges.groupBy(F.col("dst").alias("id")).agg(
-        F.count("*").alias("inlinks")
-    )
+    links = F.sum("w") if "w" in edges.columns else F.count("*")
+    indeg = edges.groupBy(F.col("dst").alias("id")).agg(links.alias("inlinks"))
     r = ranks.join(indeg, "id", "left").select(
         "id", F.coalesce("inlinks", F.lit(0)).alias("inlinks"), "rank"
     )

@@ -1,15 +1,18 @@
 """build_graph on its two paths — one Arrow task and Spark's workers —
 gives the same graph."""
 
+import uuid
 from collections import Counter
 
 import pytest
 
+from ps_projekt_pagerank_spark import NORTH_EPSILON
 from ps_projekt_pagerank_spark.fixtures import FIXTURE_GRAPHS, MINI_EDGES, tripled_k
 from ps_projekt_pagerank_spark.operators import graph_task, pagerank_task
 from ps_projekt_pagerank_spark.operators.graph import GraphTables, build_graph
+from ps_projekt_pagerank_spark.operators.pagerank import pagerank
 from ps_projekt_pagerank_spark.sources.snap import edges_from_pairs
-from tests.test_pagerank_spark import MULTIGRAPH
+from tests.test_pagerank_spark import MULTIGRAPH, _assert_matches_oracle
 
 BUILDS = ["task", "distributed"]
 STAR = [(i, 0) for i in range(1, 4001)] + [(i, 1 + i % 997) for i in range(1, 4001)]
@@ -136,6 +139,9 @@ def test_rank_loops_release_their_checkpoints(spark):
     from ps_projekt_pagerank_spark.operators.salsa import salsa
 
     g = build_graph(edges_from_pairs(spark, MINI_EDGES))
+    # the graph's own row views, which its first reader materializes and
+    # g.unpersist releases
+    g.nodes.count(), g.adj.count()
     try:
         for op, args in (
             (pagerank_fixed, (10,)),
@@ -146,5 +152,65 @@ def test_rank_loops_release_their_checkpoints(spark):
             before = _persisted(spark)
             out = op(None, *args, graph=g)
             assert _persisted(spark) <= before | _checkpoint_ids(out), op
+    finally:
+        g.unpersist()
+
+
+@pytest.mark.parametrize("case", ["wide-ids", "negative-ids", "empty"])
+def test_packed_round_trip_across_slices(spark, monkeypatch, case):
+    """At 3 entries a slice every packed array spans several binary rows:
+    the one-task build still equals the distributed one, row views
+    included, and the kernel ranks either graph, packed, as the oracle
+    does (a distributed graph is packed in the rank task itself)."""
+    monkeypatch.setattr(graph_task, "CHUNK", 3)
+    edge_list = CASES[case]
+    graphs = {path: _build_on(path, edges_from_pairs(spark, edge_list))
+              for path in BUILDS}
+    assert _contents(graphs["task"]) == _contents(graphs["distributed"])
+    g = graphs["task"]
+    tags = [r["tag"] for r in g.checkpoint.select("tag").collect()]
+    assert tags == [pagerank_task.NODES] * -(-g.num_nodes // 3) + [
+        pagerank_task.ADJ] * -(-g.num_adj_rows // 3)
+    for g in graphs.values():
+        if edge_list:
+            _assert_matches_oracle(spark, edge_list, graph=g)
+        else:
+            res = pagerank(None, graph=g)
+            assert res.iterations == 0 and res.ranks.count() == 0
+        g.unpersist()
+
+
+def _spark_jobs(spark, run):
+    """``run()`` and the number of Spark jobs it ran, read from the
+    status tracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("path", BUILDS)
+def test_one_task_pagerank_is_one_spark_job(spark, path):
+    """A pagerank call on a graph that fits the one-task kernel, cold or
+    warm-started, runs exactly one Spark job, and persists nothing but
+    the checkpoint its ranks read: the one-task graph's row views stay
+    unmaterialized."""
+    g = _build_on(path, edges_from_pairs(spark, FIXTURE_GRAPHS["small"]))
+    assert (g.checkpoint is not None) == (path == "task")
+    init = None
+    try:
+        for start in ("cold", "warm"):
+            before = _persisted(spark)
+            res, jobs = _spark_jobs(spark, lambda: pagerank(
+                None, epsilon=NORTH_EPSILON, graph=g, init_ranks=init,
+            ))
+            assert jobs == 1, start
+            assert res.iterations > 1 and len(res.metrics) == res.iterations - 1
+            assert _persisted(spark) <= before | _checkpoint_ids(res.ranks), start
+            init = res.ranks
     finally:
         g.unpersist()

@@ -231,6 +231,23 @@ def test_reporting(spark):
     assert order_agreement(res.ranks, res.ranks) == 1.0
 
 
+def test_top_bottom_k_counts_every_duplicate_link(spark):
+    """A weighted (src, dst, w) frame stands for w links per row: over
+    build_graph(MULTIGRAPH).adj top_bottom_k gives the in-link counts it
+    gives over the raw MULTIGRAPH edges (node 1: two 0 -> 1 links and a
+    self-loop)."""
+    edges = edges_from_pairs(spark, MULTIGRAPH)
+    g = build_graph(edges)
+    ranks = pagerank(None, graph=g).ranks
+    raw, weighted = (
+        sorted(tuple(r) for r in top_bottom_k(ranks, e, k=3).collect())
+        for e in (edges, g.adj)
+    )
+    assert weighted == raw
+    assert {r[1] for r in raw if r[0] == 1} == {3}
+    g.unpersist()
+
+
 def test_checkpoint_resume(spark, tmp_path):
     from ps_projekt_pagerank_spark.sources.checkpoint import IterationCheckpointer
 

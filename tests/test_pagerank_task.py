@@ -1,45 +1,44 @@
 """The one-task PageRank kernel on hand-built Arrow batches — no JVM."""
 
-from collections import Counter
-
 import pyarrow as pa
 import pytest
 
 from ps_projekt_pagerank_spark import DAMPING, NORTH_EPSILON
 from ps_projekt_pagerank_spark.fixtures import MINI_EDGES
-from ps_projekt_pagerank_spark.operators.pagerank_task import _task, budget_bytes
+from ps_projekt_pagerank_spark.operators import graph_task
+from ps_projekt_pagerank_spark.operators.pagerank_task import (
+    ADJ,
+    INIT,
+    NODES,
+    _task,
+    budget_bytes,
+)
 from ps_projekt_pagerank_spark.oracle import pagerank as oracle_pagerank
 
-_IN = pa.schema([("tag", pa.int8()), ("id", pa.int64()), ("rank", pa.float64()),
-                 ("src", pa.int64()), ("dst", pa.int64()), ("w", pa.int64())])
-
-
-def _union(edge_list, init=None):
-    """The tagged union pagerank_one_task feeds its task: the start ranks
-    of a warm start (``init``, id -> rank), then the collapsed adjacency,
-    in two batches."""
-    adj = Counter(edge_list)
-    init = init or {}
-    starts = {"tag": [0] * len(init), "id": list(init), "rank": list(init.values())}
-    edges = {"tag": [1] * len(adj), "src": [s for s, _ in adj],
-             "dst": [d for _, d in adj], "w": list(adj.values())}
-    return [
-        pa.RecordBatch.from_pydict(
-            {c: cols.get(c, [None] * len(cols["tag"])) for c in _IN.names},
-            schema=_IN,
-        )
-        for cols in (starts, edges)
-    ]
+def _union(edge_list, init=(), chunk=4):
+    """The input pagerank_one_task feeds its task: the graph as the
+    one-task build packs it, ``chunk`` entries a slice, then the start
+    ranks of a warm start (``init``, (id, rank) pairs)."""
+    edges = pa.RecordBatch.from_pydict(
+        {"src": [s for s, _ in edge_list], "dst": [d for _, d in edge_list]},
+        schema=pa.schema([("src", pa.int64()), ("dst", pa.int64())]),
+    )
+    starts = pa.RecordBatch.from_pydict(
+        {"tag": [INIT] * len(init), "id": [i for i, _ in init],
+         "rank": [r for _, r in init]},
+        schema=pa.schema([("tag", pa.int8()), ("id", pa.int64()),
+                          ("rank", pa.float64())]),
+    )
+    return [*graph_task._task(iter([edges]), False, chunk), starts]
 
 
 def _run(batches, max_iterations=1000, num_nodes=10):
     out = pa.Table.from_batches(list(_task(
         iter(batches), num_nodes, DAMPING, NORTH_EPSILON, max_iterations
-    ))).to_pydict()
-    ranks = {i: r for t, i, r in zip(out["tag"], out["id"], out["rank"]) if t == 0}
-    records = [(i, a) for t, i, a in zip(out["tag"], out["iteration"], out["n_active"])
-               if t == 1]
-    return ranks, records
+    ))).to_pylist()
+    ranks = {r["id"]: r["rank"] for r in out if r["id"] is not None}
+    (sweeps,) = [r["sweeps"] for r in out if r["id"] is None]
+    return ranks, [(s["iteration"], s["n_active"]) for s in sweeps]
 
 
 def test_task_matches_oracle():
@@ -63,7 +62,7 @@ def test_task_warm_start_partial_and_foreign_ids():
     """Nodes without a start rank start at 1/N; start ranks of ids that
     are not nodes are dropped."""
     init = {0: 0.3, 4: 0.2, 9: 0.1, 10**6: 0.5}
-    ranks, records = _run(_union(MINI_EDGES, init), max_iterations=0)
+    ranks, records = _run(_union(MINI_EDGES, init.items()), max_iterations=0)
     assert records == []
     assert ranks == {v: init.get(v, 1 / 10) for v in range(10)}
 
@@ -71,7 +70,7 @@ def test_task_warm_start_partial_and_foreign_ids():
 @pytest.mark.parametrize(
     ("batches", "num_nodes", "message"),
     [(_union(MINI_EDGES), 11, "adjacency holds 10 node ids, the graph 11"),
-     (_union(MINI_EDGES, {0: 0.1}) * 2, 10, "duplicate ids in the start ranks"),
+     (_union(MINI_EDGES, [(0, 0.1)] * 2), 10, "duplicate ids in the start ranks"),
      ([], 10, "received no rows")],
 )
 def test_task_raises_on_inconsistent_input(batches, num_nodes, message):
@@ -102,3 +101,18 @@ def test_kernel_shares_no_code_with_the_oracle():
         for alias in node.names
     ]
     assert modules and not [m for m in modules if "oracle" in m], modules
+
+
+def test_packed_graph_round_trips_across_slices():
+    """With 4 entries a slice, each packed array spans several binary
+    rows; the task reads back the arrays a single slice holds."""
+    from ps_projekt_pagerank_spark.operators.pagerank_task import PACKED, arrow_columns
+
+    sliced, whole = _union(MINI_EDGES), _union(MINI_EDGES, chunk=1 << 10)
+    tags = [b.column("tag")[0].as_py() for b in sliced[:-1]]
+    assert tags.count(NODES) == 3 and tags.count(ADJ) > 2, tags
+    a, b = (arrow_columns(iter(u), PACKED) for u in (sliced, whole))
+    assert a.keys() == b.keys() == {"ids", "outdeg", "src", "dst", "w"}
+    for c in a:
+        assert a[c].tolist() == b[c].tolist(), c
+    assert a["ids"].tolist() == list(range(10))

@@ -101,15 +101,17 @@ def main():
     sections.append((
         "PageRank sweep (operators.sweep.step: scatter join + gather agg "
         "+ commit)",
-        "The |E|-row adjacency side must NOT re-shuffle: this graph fits "
-        "the one-task build, so it is one checkpointed partition (Scan "
+        "The |E|-row adjacency side must NOT re-shuffle. This graph fits "
+        "the one-task build, so the adjacency and the node table are row "
+        "views of its packed checkpoint, each an InMemoryTableScan of ONE "
+        "cached partition (InMemoryRelation over MapInArrow over Scan "
         "ExistingRDD, SinglePartition); a graph built by Spark's workers "
-        "is pre-partitioned by src and cached instead. The |V|-row rank "
-        "state is the broadcast/shuffled side. The gather is a two-phase "
-        "HashAggregate; over the one-partition adjacency both phases run "
-        "in that partition's task with no exchange between them, and the "
-        "only exchanges hash the gathered sums and the state for the "
-        "commit join. All stages inside WholeStageCodegen.",
+        "is pre-partitioned by src and cached instead. At this size AQE "
+        "broadcasts the small cached adjacency and streams the node table "
+        "past it; the gather is a two-phase HashAggregate whose phases "
+        "both run in the one partition's task, with no exchange between "
+        "them. The only exchanges hash the |V|-row node table and the "
+        "gathered sums for the commit join.",
         formatted(sweep),
     ))
 
