@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -130,6 +130,32 @@ def sink_nodes(edges: DataFrame) -> DataFrame:
     )
 
 
+def edge_row_count(edges: DataFrame, weight_col: str | None = None) -> int:
+    """The number of edge rows, with the rows that have a null endpoint
+    and, given ``weight_col``, those with a null weight. Raises
+    ValueError when there are any: a node id cannot be null, and a null
+    weight would make an edge count for nothing. The counts are observed
+    on one pass over ``edges`` into the ``noop`` sink: one Spark job,
+    where an aggregation is two (AQE runs its shuffle's map stage as a
+    job of its own)."""
+    nulls = {"endpoint": F.col("src").isNull() | F.col("dst").isNull()}
+    if weight_col is not None:
+        nulls["weight"] = F.col(weight_col).isNull()
+    obs = Observation()
+    edges.observe(
+        obs, F.count("*").alias("rows"),
+        *(F.count(F.when(c, 1)).alias(what) for what, c in nulls.items()),
+    ).write.format("noop").mode("overwrite").save()
+    counts = obs.get
+    for what in nulls:
+        if counts[what]:
+            raise ValueError(
+                f"{counts[what]} edge rows have a null {what}; a graph's "
+                "node ids and edge weights cannot be null"
+            )
+    return counts["rows"]
+
+
 def build_graph(edges: DataFrame, weight_col: str | None = None) -> GraphTables:
     """Build the persisted node/adjacency tables for iterative algorithms.
 
@@ -151,19 +177,12 @@ def build_graph(edges: DataFrame, weight_col: str | None = None) -> GraphTables:
     re-expanding the multiset. A built adjacency fed back this way
     (sources.bucketed.load_graph) gives the same GraphTables.
 
-    An edge row with a null endpoint raises ValueError on both paths.
+    An edge row with a null endpoint, or a null ``weight_col``, raises
+    ValueError on both paths (``edge_row_count``).
     """
     from . import graph_task
 
-    null_endpoint = F.col("src").isNull() | F.col("dst").isNull()
-    m, nulls = edges.agg(
-        F.count("*"), F.count(F.when(null_endpoint, 1))
-    ).first()
-    if nulls:
-        raise ValueError(
-            f"{nulls} edge rows have a null endpoint; a graph's node ids "
-            "cannot be null"
-        )
+    m = edge_row_count(edges, weight_col)
     if graph_task.fits(m):
         return graph_task.build_one_task(edges, weight_col)
 

@@ -6,14 +6,19 @@ The reference builds its graph in one sequential pass over the edge file
 distributed build (operators.graph.build_graph) pays a Spark plan per
 table and per count, a fixed cost that outweighs the row work as long as
 the edge list fits one machine. Here the edge rows reach one task
-(``coalesce(1).mapInArrow``), which derives the node ids and
-out-degrees, collapses duplicate (src, dst) rows into one weighted row,
-and emits the graph packed the way operators.pagerank_task reads it: the
-node ids, the out-degrees and the collapsed adjacency as node indices
-plus ``w``, each cut into slices of at most ``CHUNK`` entries, one
-binary row per slice. One eager localCheckpoint of those few rows is
-the build's only pass over the edges; the GraphTables counts are
-observed on the same action.
+(``coalesce(1).mapInArrow``), whose ``graph_arrays`` derives the node
+ids and out-degrees and collapses duplicate (src, dst) rows into one
+weighted row. The task emits the graph packed the way
+operators.pagerank_task reads it: the node ids, the out-degrees and the
+collapsed adjacency as node indices plus ``w``, each cut into slices of
+at most ``CHUNK`` entries, one binary row per slice. One eager
+localCheckpoint of those few rows is the build's only pass over the
+edges; the GraphTables counts are observed on the same action.
+
+``graph_arrays`` is also the build of the rank task itself when a
+``pagerank`` call builds its own graph: the edge rows then go straight
+into the rank task, which builds and ranks in one Python process, and no
+GraphTables is made.
 
 The node and adjacency tables are row views of that checkpoint,
 unpacked by one more task and persisted the first time something reads
@@ -37,7 +42,15 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .graph import GraphTables, counted_graph_tables, id_layout
-from .pagerank_task import ADJ, NODES, PACKED, ROW_BYTES, arrow_columns, budget_bytes
+from .pagerank_task import (
+    ADJ,
+    NODES,
+    PACKED,
+    ROW_BYTES,
+    arrow_columns,
+    budget_bytes,
+    edge_columns,
+)
 
 # Entries per packed slice: 2 MB of int64 a binary value, so one row
 # stays small for the JVM however large the graph
@@ -60,23 +73,44 @@ def fits(num_edge_rows: int) -> bool:
     budget (pagerank_task.budget_bytes), each edge row priced at
     3 * ROW_BYTES. That bounds the graph: m edge rows make at most 2m
     nodes and m adjacency rows, so every graph built here is within
-    pagerank_task.fits. It also bounds the build itself: the task's
-    Python worker peaks at 150-197 bytes per edge row (VmHWM at task end
-    less VmRSS at task start, a fresh worker per task, on an R-MAT graph
-    with a hub of 0.46M edge rows and three disjoint copies of it), well
-    under that price."""
+    pagerank_task.fits. It also bounds the tasks that build from edge
+    rows, this one and the rank task that builds its own graph
+    (operators.pagerank): their Python worker peaks at 168-243 bytes per
+    edge row (VmHWM at task end less VmRSS at task start, a fresh
+    process per task fed the task's Arrow input, on an R-MAT graph with
+    a hub of 0.46M edge rows and on three disjoint copies of it; the
+    rank task cold and warm-started from every node), well under that
+    price. The peak falls in the build (np.unique, the pair sort); the
+    sweeps run after it on less."""
     return 3 * num_edge_rows * ROW_BYTES <= budget_bytes()
 
 
-def node_index(src: np.ndarray, dst: np.ndarray, w: np.ndarray):
-    """G1 and G2 over edge arrays: the node ids (the sorted distinct
-    endpoints), ``src`` and ``dst`` as indices into them, and each node's
-    out-degree, the exact integer sum of ``w`` over its out-edges."""
+def graph_arrays(src: np.ndarray, dst: np.ndarray, w: np.ndarray):
+    """G1-G3 over edge arrays: the node ids (the sorted distinct
+    endpoints), each node's out-degree (the exact integer sum of ``w``
+    over its out-edges; G4's sinks are its zeros) and the collapsed
+    adjacency, one entry per (src, dst) pair in (src, dst) order, as
+    indices into the ids plus ``w``, the exact sum over the pair. An
+    empty ``w`` weighs every edge 1. Each input and temporary is dropped
+    once spent, so a caller that passes its only references to the edge
+    arrays keeps none of them alive past the build."""
     m = len(src)
+    if not len(w):
+        w = np.ones(m, np.int64)
     ids, index = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    outdeg = np.zeros(len(ids), np.int64)
+    del src, dst
+    n = len(ids)
+    outdeg = np.zeros(n, np.int64)
     np.add.at(outdeg, index[:m], w)
-    return ids, index[:m], index[m:], outdeg
+    key = index[:m] * n + index[m:]
+    del index
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    first = np.flatnonzero(np.diff(key, prepend=-1))
+    w = np.add.reduceat(w[order], first)
+    del order
+    pair_src, pair_dst = np.divmod(key[first], n)
+    return ids, outdeg, pair_src, pair_dst, w
 
 
 def _slices(tag: int, chunk: int, **arrays: np.ndarray) -> list[dict]:
@@ -90,52 +124,26 @@ def _slices(tag: int, chunk: int, **arrays: np.ndarray) -> list[dict]:
     ]
 
 
-def _task(batches, weighted: bool, chunk: int):
-    """mapInArrow body: the whole build over the edge rows. Yields the
-    node slices in id order, then the adjacency slices in (src, dst)
-    order, one row per batch."""
-    names = ("src", "dst", "w") if weighted else ("src", "dst")
-    cols = arrow_columns(batches, {None: names})
-    m = len(cols["src"])
-    if not m:
+def _task(batches, chunk: int):
+    """mapInArrow body: the whole build over the edge rows (src, dst and,
+    when weighted, w). Yields the node slices in id order, then the
+    adjacency slices in (src, dst) order, one row per batch."""
+    cols = arrow_columns(batches, {None: ("src", "dst", "w")})
+    if not len(cols["src"]):
         return
-    w = cols["w"] if weighted else np.ones(m, np.int64)
-    ids, src, dst, outdeg = node_index(cols["src"], cols["dst"], w)  # G1, G2
+    ids, outdeg, src, dst, w = graph_arrays(
+        cols.pop("src"), cols.pop("dst"), cols.pop("w")
+    )
     n = len(ids)
-    # G3: one row per (src, dst) pair, its w the exact sum over the pair
-    key = src * n + dst
-    order = np.argsort(key, kind="stable")
-    key = key[order]
-    first = np.flatnonzero(np.diff(key, prepend=-1))
-    pair_src, pair_dst = np.divmod(key[first], n)
-    in_rows = np.bincount(pair_dst, minlength=n)
+    in_rows = np.bincount(dst, minlength=n)
     rows = _slices(NODES, chunk, ids=ids, outdeg=outdeg) + _slices(
-        ADJ, chunk, src=pair_src, dst=pair_dst,
-        w=np.add.reduceat(w[order], first),
+        ADJ, chunk, src=src, dst=dst, w=w
     )
     counts = (n, np.count_nonzero(outdeg == 0), ids[0], ids[-1],  # G4
-              np.count_nonzero(in_rows), in_rows.max(), len(first), w.sum())
+              np.count_nonzero(in_rows), in_rows.max(), len(w), w.sum())
     rows[0].update(zip(_COUNTS, map(int, counts)))
     for row in rows:
         yield pa.RecordBatch.from_pylist([row], schema=_OUT)
-
-
-def _pack(rows: DataFrame, weighted: bool) -> DataFrame:
-    """The build task over edge ``rows`` (src, dst[, w] as LONG)."""
-    task = partial(_task, weighted=weighted, chunk=CHUNK)
-    return rows.coalesce(1).mapInArrow(task, _OUT_DDL)
-
-
-def packed(g: GraphTables) -> DataFrame:
-    """``g`` as packed rows: the one-task build's checkpoint, or, for a
-    graph built on Spark's workers, its adjacency packed by the build
-    task (weighted by ``w``), unmaterialized."""
-    if g.checkpoint is not None:
-        return g.checkpoint
-    return _pack(
-        g.adj.select(*(F.col(c).cast("long") for c in ("src", "dst", "w"))),
-        weighted=True,
-    )
 
 
 def _node_rows(batches):
@@ -164,14 +172,11 @@ def build_one_task(edges: DataFrame, weight_col: str | None) -> GraphTables:
     w in the id layout) are persisted row views of it, materialized by
     their first reader. One Spark job, the eager checkpoint, whose
     observed aggregates are the counts."""
-    weighted = weight_col is not None
-    rows = edges.select(
-        F.col("src").cast("long"), F.col("dst").cast("long"),
-        *([F.col(weight_col).cast("long").alias("w")] if weighted else []),
-    )
     obs = Observation()
     out = (
-        _pack(rows, weighted)
+        edges.select(*edge_columns(weight_col))
+        .coalesce(1)
+        .mapInArrow(partial(_task, chunk=CHUNK), _OUT_DDL)
         .observe(obs, *(F.max(k).alias(k) for k in _COUNTS))
         .localCheckpoint(eager=True)
     )

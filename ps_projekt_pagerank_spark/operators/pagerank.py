@@ -1,11 +1,14 @@
 """P1-P7 — iterative PageRank with the reference's exact semantics
 (reference sequential loop: src/Graph.cpp:118-173; formula Naloga4.pdf p.1),
 run one of two ways. A graph that fits one task's memory runs the
-reference's sequential loop itself, as NumPy over the packed graph inside
-one Arrow task (operators.pagerank_task). A larger graph, or a
-checkpointed call, runs a driver-side while-loop over DataFrame gather/scatter — the Spark idiom for
-the reference's host-driven GPU loop (Graph4CL.cpp:112-206, which likewise
-collects a scalar per iteration and re-injects it).
+reference's sequential loop itself, as NumPy inside one Arrow task
+(operators.pagerank_task) — over the packed graph of a one-task build,
+or, when the call builds its own graph, over the edge rows, built into
+the graph in that same task as the reference builds and ranks in one
+run (Graph.cpp:44-173). A larger graph, or a checkpointed call, runs a
+driver-side while-loop over DataFrame gather/scatter — the Spark idiom
+for the reference's host-driven GPU loop (Graph4CL.cpp:112-206, which
+likewise collects a scalar per iteration and re-injects it).
 
 Semantics (validated against the NumPy oracle, which reproduces the
 reference binary's 25/29/44 fixture iteration counts):
@@ -38,7 +41,7 @@ from pyspark.sql import functions as F
 
 from .. import DAMPING, NORTH_EPSILON
 from . import graph_task, pagerank_task
-from .graph import GraphTables, build_graph, release_checkpoint
+from .graph import GraphTables, build_graph, edge_row_count, release_checkpoint
 from .sweep import Sweeps, gather, iterate, node_state, sink_mass
 
 
@@ -73,6 +76,7 @@ def pagerank(
     checkpointer=None,
     graph: GraphTables | None = None,
     init_ranks: DataFrame | None = None,
+    weight_col: str | None = None,
 ) -> PageRankResult:
     """Run frozen-node PageRank to convergence.
 
@@ -82,16 +86,26 @@ def pagerank(
     1/N-start sweeps (tested). Nodes absent from ``init_ranks`` (newly
     discovered pages) start at 1/N; all nodes start active.
 
-    The gather salts with the bucket count build_graph derived from the
-    in-degree distribution (``graph.salt_buckets``; 1 on uniform graphs).
+    Without ``graph`` the call builds its own from ``edges``, with
+    ``weight_col`` naming a pre-weighted edge list's integer weight
+    column, as in build_graph. When the edge rows fit the one-task build
+    (``graph_task.fits``), they go straight into the rank task, which
+    builds the graph and ranks it in one Python process: two Spark jobs,
+    the row count (``graph.edge_row_count``) and the rank task, and no
+    GraphTables. A
+    larger edge list, or a call with a ``checkpointer``, is built by
+    build_graph first.
 
-    Graphs that fit one task's memory budget (``pagerank_task.fits``)
-    run every sweep in one task (``pagerank_task``) over the packed
-    graph (``graph_task.packed``; a graph built on Spark's workers is
-    packed in that same task): one Spark job per call, which leaves a
-    one-task graph's node and adjacency rows unmaterialized. Larger
-    graphs, and every call with a ``checkpointer``, run the distributed
-    sweep (operators.sweep): one job per sweep.
+    A built graph that fits one task's memory budget
+    (``pagerank_task.fits``) runs every sweep in one task
+    (``pagerank_task``): a one-task build's packed checkpoint is read
+    as it is, leaving the node and adjacency rows unmaterialized, and a
+    graph built on Spark's workers is sent as its adjacency rows. Either
+    way that is one Spark job per call. Larger graphs, and every call
+    with a ``checkpointer``, run the distributed sweep (operators.sweep):
+    one job per sweep. The gather there salts with the bucket count
+    build_graph derived from the in-degree distribution
+    (``graph.salt_buckets``; 1 on uniform graphs).
 
     ``checkpointer`` (sources.checkpoint.IterationCheckpointer) durably
     writes rank vectors + metrics after every sweep and enables resume;
@@ -99,34 +113,53 @@ def pagerank(
     ``metrics`` holds one record per sweep that ran a scatter; the
     counted empty sweep (P6) has none.
     """
+    task_args = (init_ranks, damping, epsilon, max_iterations)
+    if graph is None and checkpointer is None:
+        m = edge_row_count(edges, weight_col)
+        if m and graph_task.fits(m):
+            return _one_task(
+                pagerank_task.edge_rows(edges, weight_col), *task_args
+            )
     own_graph = graph is None
-    g = graph or build_graph(edges)
+    g = graph or build_graph(edges, weight_col)
     try:
         n = g.num_nodes
         if n == 0:
             ranks = g.nodes.sparkSession.createDataFrame([], "id LONG, rank DOUBLE")
             return PageRankResult(ranks=ranks, iterations=0)
         if checkpointer is None and pagerank_task.fits(g):
-            ranks, metrics = pagerank_task.pagerank_one_task(
-                graph_task.packed(g), g, init_ranks, damping, epsilon,
-                max_iterations,
-            )
-            sweeps = len(metrics)
-            n_active = metrics[-1]["n_active"] if metrics else n
-        else:
-            run = _sweep_loop(
-                g, init_ranks, damping, epsilon, max_iterations, checkpointer
-            )
-            ranks = run.state.select(F.col("id").cast("long").alias("id"), "rank")
-            sweeps, n_active, metrics = (
-                run.iterations, run.scalars["n_active"], run.metrics
-            )
-        if not n_active and sweeps < max_iterations:
-            sweeps += 1  # final empty sweep counted (Graph.cpp:133,158)
-        return PageRankResult(ranks=ranks, iterations=sweeps, metrics=metrics)
+            if g.checkpoint is not None:
+                return _one_task(g.checkpoint, *task_args)
+            return _one_task(pagerank_task.edge_rows(g.adj, "w"), *task_args)
+        run = _sweep_loop(
+            g, init_ranks, damping, epsilon, max_iterations, checkpointer
+        )
+        ranks = run.state.select(F.col("id").cast("long").alias("id"), "rank")
+        return _counted(
+            ranks, run.iterations, run.scalars["n_active"], run.metrics,
+            max_iterations,
+        )
     finally:
         if own_graph:
             g.unpersist()
+
+
+def _one_task(rows, init_ranks, damping, epsilon, max_iterations):
+    """P1-P7 in one task over graph ``rows`` (pagerank_task)."""
+    ranks, metrics = pagerank_task.pagerank_one_task(
+        rows, init_ranks, damping, epsilon, max_iterations
+    )
+    n_active = metrics[-1]["n_active"] if metrics else None
+    return _counted(ranks, len(metrics), n_active, metrics, max_iterations)
+
+
+def _counted(ranks, sweeps, n_active, metrics, max_iterations):
+    """The result of ``sweeps`` sweeps, the last leaving ``n_active``
+    nodes active (None: no sweep ran); a converged run also counts the
+    empty sweep that found no active node (Graph.cpp:133,158)."""
+    if n_active == 0 and sweeps < max_iterations:
+        sweeps += 1
+    return PageRankResult(ranks=ranks, iterations=sweeps, metrics=metrics)
 
 
 def _sweep_loop(

@@ -1,18 +1,23 @@
 """Frozen-node PageRank (P1-P7 of operators.pagerank) in ONE task, for
 graphs whose adjacency fits one Python worker's memory.
 
-The reference packs its graph as CSR once and then ranks it with one
-sequential loop over the packed arrays (Graph4CL.cpp:16-46,
-Graph.cpp:118-173). The distributed sweep (operators.sweep) pays one
-Spark plan and one eager checkpoint per sweep, a fixed cost that
-outweighs the row work as long as the graph fits one machine. Here the
-graph reaches one task (``coalesce(1).mapInArrow``) as the packed arrays
-operators.graph_task builds — node ids, out-degrees and the collapsed
-adjacency as node indices plus ``w``, a few binary rows — together with
-the start ranks of a warm start, tagged into the same union. The task
-runs every sweep over dense NumPy arrays; one eager localCheckpoint of
-its output, the ranks, is the call's only Spark job, and the per-sweep
-records come back as an Observation on that same action.
+The reference rebuilds its graph from the edge file, packs it as CSR and
+ranks it with one sequential loop over the packed arrays, all in one
+process (Graph.cpp:44-173, Graph4CL.cpp:16-46). The distributed sweep
+(operators.sweep) pays one Spark plan and one eager checkpoint per
+sweep, a fixed cost that outweighs the row work as long as the graph
+fits one machine. Here the graph reaches one task
+(``coalesce(1).mapInArrow``) in one of two forms, together with the
+start ranks of a warm start, tagged into the same union: the packed
+arrays a one-task build checkpointed (operators.graph_task: node ids,
+out-degrees and the collapsed adjacency as node indices plus ``w``, a
+few binary rows), or plain edge rows, which the task builds into those
+arrays itself with the one-task build's own G1-G3. The task runs every
+sweep over dense NumPy arrays; one eager localCheckpoint of its output,
+the ranks, is the call's only Spark job, and the per-sweep records come
+back as an Observation on that same action. Every Python task pays a
+fixed start-up cost in its worker, so building in the rank task, not in
+a task of its own, pays it once per call.
 
 This module shares no code with oracle/: the gate compares the two, which
 only means something while they are independent implementations.
@@ -42,21 +47,26 @@ from .graph import GraphTables
 ROW_BYTES = 200
 
 # A packed graph, as operators.graph_task writes it: each row holds one
-# slice of the node arrays (tag NODES: ``ids``, sorted, and ``outdeg``) or
-# of the collapsed adjacency's (tag ADJ: ``src`` and ``dst`` as indices
-# into the ids, and ``w``), little-endian int64 bytes, slices in order.
-# The rank task's input adds one row per start rank (tag INIT: id, rank).
-NODES, ADJ, INIT = 0, 1, 2
+# slice of the node arrays (tag NODES: ``ids``, sorted, and ``outdeg``;
+# the first row also carries the graph's counts, ``num_nodes`` among
+# them) or of the collapsed adjacency's (tag ADJ: ``src`` and ``dst`` as
+# indices into the ids, and ``w``), little-endian int64 bytes, slices in
+# order. The rank task reads a graph either so or as plain edge rows (tag
+# EDGES: src, dst and, when weighted, w, as ids), and adds one row per
+# start rank (tag INIT: id, rank).
+NODES, ADJ, INIT, EDGES = 0, 1, 2, 3
 PACKED = {NODES: ("ids", "outdeg"), ADJ: ("src", "dst", "w")}
 # The task's output: a rank row per node, then one row (id null) whose
 # ``sweeps`` lists the per-sweep records. A rank row carries nothing else:
 # each further column costs the JVM more per call than all the sweeps.
-_SWEEP = pa.struct([("iteration", pa.int32()), ("seconds", pa.float64()),
-                    ("n_active", pa.int64())])
+_SWEEP = pa.struct([("iteration", pa.int32()), ("edges", pa.int64()),
+                    ("seconds", pa.float64()), ("n_active", pa.int64())])
 _OUT = pa.schema([("id", pa.int64()), ("rank", pa.float64()),
                   ("sweeps", pa.list_(_SWEEP))])
-_OUT_DDL = ("id LONG, rank DOUBLE, "
-            "sweeps ARRAY<STRUCT<iteration: INT, seconds: DOUBLE, n_active: LONG>>")
+_OUT_DDL = (
+    "id LONG, rank DOUBLE, sweeps ARRAY<STRUCT<iteration: INT, edges: LONG, "
+    "seconds: DOUBLE, n_active: LONG>>"
+)
 
 
 def budget_bytes(meminfo: str = "/proc/meminfo") -> int:
@@ -110,7 +120,10 @@ def frozen_sweeps(
 
 
 def _values(col: pa.Array) -> np.ndarray:
-    """``col`` as NumPy; a BINARY column's packed int64 slices joined."""
+    """``col``'s non-null entries as NumPy; a BINARY column's packed int64
+    slices joined."""
+    if col.null_count:
+        col = col.drop_null()
     if pa.types.is_binary(col.type):
         return np.frombuffer(b"".join(col.to_pylist()), "<i8")
     return col.to_numpy(zero_copy_only=False)
@@ -118,10 +131,10 @@ def _values(col: pa.Array) -> np.ndarray:
 
 def arrow_columns(batches, parts: dict) -> dict[str, np.ndarray]:
     """The named columns of Arrow ``batches`` as NumPy arrays, each
-    concatenated over all batches in row order. ``parts`` maps a tag to
-    the columns read from the rows carrying that tag; tag None reads
-    every row (the batches then need no tag column). A column the
-    batches lack reads as empty."""
+    concatenated over all batches in row order, nulls skipped. ``parts``
+    maps a tag to the columns read from the rows carrying that tag; tag
+    None reads every row (the batches then need no tag column). A column
+    the batches lack reads as empty."""
     got: dict[str, list] = {c: [] for cols in parts.values() for c in cols}
     for b in batches:
         for tag, cols in parts.items():
@@ -131,6 +144,21 @@ def arrow_columns(batches, parts: dict) -> dict[str, np.ndarray]:
                     got[c].append(_values(rows.column(c)))
     return {c: np.concatenate(v) if v else np.empty(0, np.int64)
             for c, v in got.items()}
+
+
+def edge_columns(weight_col: str | None) -> list:
+    """An edge list's src, dst and, given ``weight_col``, that weight as
+    ``w``, all LONG: the edge rows the build and the rank task read."""
+    return [F.col("src").cast("long"), F.col("dst").cast("long"),
+            *([] if weight_col is None
+              else [F.col(weight_col).cast("long").alias("w")])]
+
+
+def edge_rows(edges: DataFrame, weight_col: str | None) -> DataFrame:
+    """``edges`` as the task's graph rows (tag EDGES), to be built into
+    the graph in the task itself; unweighted, each row weighs 1."""
+    return edges.select(F.lit(EDGES).cast("byte").alias("tag"),
+                        *edge_columns(weight_col))
 
 
 def _start_ranks(ids: np.ndarray, init_id: np.ndarray, init_rank: np.ndarray):
@@ -146,58 +174,76 @@ def _start_ranks(ids: np.ndarray, init_id: np.ndarray, init_rank: np.ndarray):
     return rank
 
 
-def _task(batches, num_nodes: int, damping: float, epsilon: float,
-          max_iterations: int):
-    """mapInArrow body: the whole frozen-node loop over the packed graph
-    and the start ranks. Yields a rank row per node, then the row of
-    per-sweep records."""
-    cols = arrow_columns(batches, {**PACKED, INIT: ("id", "rank")})
-    ids = cols["ids"]
-    if not len(ids):
-        raise ValueError("the one-task PageRank received no rows")
-    if len(ids) != num_nodes:
+def _graph(cols: dict):
+    """The graph arrays (ids, outdeg, src, dst, w) the task's rows carry,
+    popped from ``cols``: read off a packed graph, or built from edge
+    rows by the one-task build's own G1-G3 (graph_task.graph_arrays)."""
+    from .graph_task import graph_arrays
+
+    num_nodes = cols.pop("num_nodes")
+    if not len(num_nodes):
+        return graph_arrays(cols.pop("src"), cols.pop("dst"), cols.pop("w"))
+    ids = cols.pop("ids")
+    if len(ids) != num_nodes[0]:
         raise ValueError(
             f"the packed adjacency holds {len(ids)} node ids, the graph "
-            f"{num_nodes}"
+            f"{num_nodes[0]}"
         )
+    return ids, *(cols.pop(c) for c in ("outdeg", "src", "dst", "w"))
+
+
+def _task(batches, damping: float, epsilon: float, max_iterations: int):
+    """mapInArrow body: the whole frozen-node loop over the graph rows
+    and the start ranks. Yields a rank row per node, then the row of
+    per-sweep records."""
+    cols = arrow_columns(batches, {
+        NODES: ("ids", "outdeg", "num_nodes"), ADJ: ("src", "dst", "w"),
+        EDGES: ("src", "dst", "w"), INIT: ("id", "rank"),
+    })
+    ids, outdeg, src, dst, w = _graph(cols)
+    if not len(ids):
+        raise ValueError("the one-task PageRank received no rows")
+    edges = int(w.sum())
     rank, records = frozen_sweeps(
-        cols["outdeg"], _start_ranks(ids, cols["id"], cols["rank"]),
-        cols["src"], cols["dst"], cols["w"], damping, epsilon, max_iterations,
+        outdeg, _start_ranks(ids, cols["id"], cols["rank"]),
+        src, dst, w, damping, epsilon, max_iterations,
     )
     no_sweeps = pa.nulls(len(ids), _OUT.field("sweeps").type)
     yield from pa.Table.from_arrays(
         [pa.array(ids), pa.array(rank), no_sweeps], schema=_OUT
     ).to_batches(max_chunksize=1 << 16)
-    sweeps = [dict(zip([f.name for f in _SWEEP], r)) for r in records]
+    sweeps = [{"iteration": it, "edges": edges, "seconds": s, "n_active": a}
+              for it, s, a in records]
     yield pa.RecordBatch.from_pylist(
         [{"id": None, "rank": None, "sweeps": sweeps}], schema=_OUT
     )
 
 
 def pagerank_one_task(
-    packed: DataFrame,
-    g: GraphTables,
+    rows: DataFrame,
     init_ranks: DataFrame | None,
     damping: float,
     epsilon: float,
     max_iterations: int,
 ) -> tuple[DataFrame, list[dict]]:
-    """Run the frozen-node loop over ``packed``, graph ``g`` as packed
-    rows (graph_task.packed), in one task, from 1/N or from
-    ``init_ranks`` (id, rank; nodes it lacks, or whose rank is null,
-    start at 1/N). Returns the ranks (id LONG, rank DOUBLE),
-    checkpointed, and one record per sweep (iteration, edges, seconds,
-    n_active) — the sweep loop's records. One Spark job, the eager
-    checkpoint, on whose action the records are observed."""
-    rows = packed
+    """Run the frozen-node loop in one task over graph ``rows``: a
+    one-task build's packed checkpoint (``GraphTables.checkpoint``) or
+    edge rows (``edge_rows``), which the task builds into the graph
+    itself. It starts from 1/N or from ``init_ranks`` (id, rank; nodes
+    it lacks, or whose rank is null, start at 1/N; a null id is no
+    node's). Returns the ranks
+    (id LONG, rank DOUBLE), checkpointed, and one record per sweep
+    (iteration, edges, seconds, n_active) — the sweep loop's records.
+    One Spark job, the eager checkpoint, on whose action the records are
+    observed."""
     if init_ranks is not None:
         init = init_ranks.select(
             F.lit(INIT).cast("byte").alias("tag"), F.col("id").cast("long"),
             F.col("rank").cast("double"),
-        ).where(F.col("rank").isNotNull())
+        ).where(F.col("id").isNotNull() & F.col("rank").isNotNull())
         rows = rows.unionByName(init, allowMissingColumns=True)
-    task = partial(_task, num_nodes=g.num_nodes, damping=damping,
-                   epsilon=epsilon, max_iterations=max_iterations)
+    task = partial(_task, damping=damping, epsilon=epsilon,
+                   max_iterations=max_iterations)
     obs = Observation()
     # the task's output is checkpointed as it comes: a filter in front of
     # the checkpoint costs more CPU than it saves its readers
@@ -206,5 +252,5 @@ def pagerank_one_task(
         .observe(obs, F.first("sweeps", ignorenulls=True).alias("sweeps"))
         .localCheckpoint(eager=True)
     )
-    records = [dict(r.asDict(), edges=g.num_edges) for r in obs.get["sweeps"]]
+    records = [r.asDict() for r in obs.get["sweeps"]]
     return out.where(F.col("id").isNotNull()).select("id", "rank"), records

@@ -11,11 +11,14 @@ could leave disagreeing with the edges. The stored ``w`` is already
 collapsed, so the rebuilt GraphTables equals the saved one.
 
 Trade-off: a store within the one-task budget (``graph_task.fits``,
-about 3.5M edge rows on a 16 GB host) loads in one task; a larger one
-takes the distributed build (node distinct, out-degree and
-``repartition(p, src)``), where a stored node table would need only one
-stats pass. In exchange the crawl merge (streaming.crawl) writes one
-table and derives no nodes.
+about 3.5M edge rows on a 16 GB host) loads in one task, and the crawl
+re-rank (streaming.crawl.incremental_rerank) does not load it at all:
+its rank task builds the graph from the stored rows and ranks it in the
+same Python process, after one row count. A larger store takes the
+distributed build (node distinct, out-degree and ``repartition(p,
+src)``), where a stored node table would need only one stats pass. In
+exchange the crawl merge (streaming.crawl) writes one table and derives
+no nodes.
 
 The module is named for a ``bucketBy(src)`` layout that no plan used
 (the merge's (src, dst) sum re-shuffles the store; the one-task load

@@ -4,8 +4,9 @@ Composes the three pieces that exist separately into the product a crawl
 pipeline runs (north-rule extension; the reference rebuilds its CSR from
 the full edge file every run, Graph.cpp:44-103):
 
-    edge stream --foreachBatch--> merge into the store --> load_graph
-                --> pagerank(init_ranks=previous)   (warm re-rank)
+    edge stream --foreachBatch--> merge into the store
+                --> pagerank(store, weight_col="w", init_ranks=previous)
+                    (warm re-rank: build and sweeps in one task)
 
 The store is sources.bucketed's one plain parquet table of the weighted
 adjacency (src, dst, w). ``apply_edge_delta`` is the merge, and the
@@ -14,18 +15,20 @@ first batch's merge is no different from the hundredth: the stored rows
 are summed per (src, dst) — the update of a sum aggregate (CPiX, ICDE
 2023) — and the sum replaces the store in one overwrite. Nothing
 else is written: node ids, out-degrees and sinks are rebuilt from the
-adjacency at load (``load_graph``).
+adjacency by whatever ranks it, as the reference rebuilds its graph on
+every run.
 
 ``stream_maintain_graph`` drives it from a Structured Streaming source
 via foreachBatch; tests/test_incremental_bucketed.py checks that the
 stream-maintained store loads as exactly the graph a batch build of the
 same edges gives.
 
-``incremental_rerank`` closes the loop: load the maintained store and
-warm-start PageRank from the previous rank vector — convergence in a
+``incremental_rerank`` closes the loop: PageRank over the maintained
+store, warm-started from the previous rank vector — convergence in a
 fraction of the cold sweeps when the delta is small (bench-measured; see
 tests/test_incremental_bucketed.py for the 1e-6 equality contract vs a
-cold batch rebuild).
+cold batch rebuild). A store that fits the one-task budget is built
+and ranked in one Python task, with no GraphTables in between.
 """
 
 from __future__ import annotations
@@ -35,7 +38,6 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import id_layout, release_checkpoint
 from ..operators.pagerank import PageRankResult, pagerank
-from ..sources.bucketed import load_graph
 
 
 def apply_edge_delta(
@@ -116,15 +118,16 @@ def incremental_rerank(
     prev_ranks: DataFrame | None = None,
     **pagerank_kwargs,
 ) -> PageRankResult:
-    """Load the maintained store (load_graph: one task when it fits) and
-    re-rank, warm-starting from ``prev_ranks`` when given."""
-    g = load_graph(spark, name)
-    try:
-        return pagerank(
-            None, graph=g, init_ranks=prev_ranks, **pagerank_kwargs
-        )
-    finally:
-        g.unpersist()
+    """Re-rank the maintained store, warm-starting from ``prev_ranks``
+    when given: ``pagerank`` over the stored rows, weighted by ``w``. A
+    store within the one-task budget (``graph_task.fits``) is built and
+    ranked in the rank task itself: two Spark jobs, the row count and
+    that task. The ranks equal those of ``pagerank`` on the graph
+    ``load_graph`` rebuilds from the store."""
+    return pagerank(
+        spark.read.table(name), weight_col="w", init_ranks=prev_ranks,
+        **pagerank_kwargs,
+    )
 
 
 def incremental_components(

@@ -100,6 +100,21 @@ def test_null_endpoint_raises_on_both_paths(spark, path):
         _build_on(path, edges)
 
 
+@pytest.mark.parametrize("path", [*BUILDS, "pagerank"])
+def test_null_weight_raises_on_every_path(spark, path):
+    """A null weight fails the row count, on both build paths and in a
+    pagerank call that builds its own graph, before any build: node 1's
+    only out-edge has no multiplicity, so node 1 has no out-degree."""
+    edges = spark.createDataFrame(
+        [(0, 1, 2), (1, 2, None), (2, 0, 1)], "src LONG, dst LONG, w LONG"
+    )
+    with pytest.raises(ValueError, match="1 edge rows have a null weight"):
+        if path == "pagerank":
+            pagerank(edges, weight_col="w")
+        else:
+            _build_on(path, edges, weight_col="w")
+
+
 def test_one_task_graph_fits_the_one_task_pagerank(spark):
     """m edge rows make at most 2m nodes and m adjacency rows: the largest
     edge list the build takes in one task, at its worst, still fits
@@ -193,24 +208,105 @@ def _spark_jobs(spark, run):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("path", BUILDS)
+@pytest.mark.parametrize("path", [*BUILDS, "own"])
 def test_one_task_pagerank_is_one_spark_job(spark, path):
     """A pagerank call on a graph that fits the one-task kernel, cold or
-    warm-started, runs exactly one Spark job, and persists nothing but
-    the checkpoint its ranks read: the one-task graph's row views stay
-    unmaterialized."""
-    g = _build_on(path, edges_from_pairs(spark, FIXTURE_GRAPHS["small"]))
-    assert (g.checkpoint is not None) == (path == "task")
-    init = None
+    warm-started, runs exactly one Spark job. A call that builds its own
+    graph from edge rows that fit the one-task build (``pagerank(edges)``,
+    ``incremental_rerank``) runs two: the row count and the rank task,
+    which builds the graph itself. Either persists nothing but the
+    checkpoint its ranks read: the one-task graph's row views stay
+    unmaterialized, and an own graph leaves no GraphTables."""
+    from ps_projekt_pagerank_spark.streaming.crawl import (
+        apply_edge_delta,
+        incremental_rerank,
+    )
+
+    edges = edges_from_pairs(spark, FIXTURE_GRAPHS["small"])
+    store = "t_one_job_store"
+    g = None
+    if path == "own":
+        apply_edge_delta(spark, store, edges)
+        calls = {
+            "pagerank(edges)": lambda init: pagerank(
+                edges, epsilon=NORTH_EPSILON, init_ranks=init
+            ),
+            "incremental_rerank": lambda init: incremental_rerank(
+                spark, store, prev_ranks=init, epsilon=NORTH_EPSILON
+            ),
+        }
+    else:
+        g = _build_on(path, edges)
+        assert (g.checkpoint is not None) == (path == "task")
+        calls = {"pagerank(graph=g)": lambda init: pagerank(
+            None, epsilon=NORTH_EPSILON, graph=g, init_ranks=init,
+        )}
     try:
-        for start in ("cold", "warm"):
-            before = _persisted(spark)
-            res, jobs = _spark_jobs(spark, lambda: pagerank(
-                None, epsilon=NORTH_EPSILON, graph=g, init_ranks=init,
-            ))
-            assert jobs == 1, start
-            assert res.iterations > 1 and len(res.metrics) == res.iterations - 1
-            assert _persisted(spark) <= before | _checkpoint_ids(res.ranks), start
-            init = res.ranks
+        for name, call in calls.items():
+            init = None
+            for start in ("cold", "warm"):
+                before = _persisted(spark)
+                res, jobs = _spark_jobs(spark, lambda: call(init))
+                assert jobs == (2 if g is None else 1), (name, start)
+                assert res.iterations > 1
+                assert len(res.metrics) == res.iterations - 1
+                assert _persisted(spark) <= before | _checkpoint_ids(
+                    res.ranks
+                ), (name, start)
+                init = res.ranks
+    finally:
+        if g is not None:
+            g.unpersist()
+        spark.sql(f"DROP TABLE IF EXISTS {store}")
+
+
+def _result(res):
+    """A PageRankResult's iterations, its sweep records less their times,
+    and its ranks."""
+    return (
+        res.iterations,
+        [{k: v for k, v in m.items() if k != "seconds"} for m in res.metrics],
+        sorted(tuple(r) for r in res.ranks.collect()),
+    )
+
+
+@pytest.mark.parametrize("case", ["multigraph", "star"])
+def test_weighted_edge_rows_rank_as_their_multigraph(spark, case):
+    """The collapsed adjacency, fed back as a weighted edge list, ranks
+    bit for bit as the multigraph it came from: same ranks, iterations
+    and sweep records (``edges`` counts every duplicate)."""
+    edges = edges_from_pairs(spark, CASES[case])
+    g = build_graph(edges)
+    try:
+        want = _result(pagerank(edges))
+        assert _result(pagerank(g.adj, weight_col="w")) == want
+        assert want[1][0]["edges"] == len(CASES[case])
     finally:
         g.unpersist()
+
+
+def test_edge_rows_over_the_budget_go_through_build_graph(spark, monkeypatch):
+    """Edge rows over the one-task build's budget go through build_graph,
+    and a graph over the kernel's budget through the sweep loop: one
+    Spark job per sweep, and the oracle's ranks."""
+    from ps_projekt_pagerank_spark.operators import pagerank as pagerank_module
+
+    calls = []
+
+    def spy(name):
+        real = getattr(pagerank_module, name)
+
+        def wrapped(*args, **kw):
+            calls.append(name)
+            return real(*args, **kw)
+
+        monkeypatch.setattr(pagerank_module, name, wrapped)
+
+    spy("build_graph")
+    spy("_sweep_loop")
+    # path="sweep" forces both budgets' fits false
+    res, jobs = _spark_jobs(spark, lambda: _assert_matches_oracle(
+        spark, FIXTURE_GRAPHS["small"], path="sweep"
+    ))
+    assert calls == ["build_graph", "_sweep_loop"]
+    assert jobs > res.iterations

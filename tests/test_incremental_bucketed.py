@@ -130,6 +130,43 @@ def test_stream_maintained_store_plus_warm_start_equals_batch(spark, tmp_path):
         g_batch.unpersist()
 
 
+def test_incremental_rerank_equals_pagerank_on_the_loaded_graph(spark):
+    """incremental_rerank builds the graph in its rank task; it gives the
+    ranks, iterations and sweep records of pagerank on the graph
+    load_graph rebuilds from the same store, built on either path, cold
+    and warm-started."""
+    from ps_projekt_pagerank_spark.streaming.crawl import (
+        apply_edge_delta,
+        incremental_rerank,
+    )
+    from tests.test_graph_task import _result
+
+    name = "t_rerank_store"
+    try:
+        apply_edge_delta(spark, name, edges_from_pairs(
+            spark, tripled_k(FIXTURE_GRAPHS["small"], 2)
+        ))
+        prev = incremental_rerank(spark, name, epsilon=1e-9)
+        apply_edge_delta(spark, name, edges_from_pairs(
+            spark, [(0, 7), (3, 9), (0, 7)]
+        ))
+        for init in (None, prev.ranks):
+            got = _result(incremental_rerank(
+                spark, name, prev_ranks=init, epsilon=1e-9
+            ))
+            for path in BUILDS:
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(graph_task, "fits", lambda m: path == "task")
+                    g = load_graph(spark, name)
+                want = _result(pagerank(
+                    None, graph=g, init_ranks=init, epsilon=1e-9
+                ))
+                g.unpersist()
+                assert got == want, (init is None, path)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def _store_rows(spark, name):
     return sorted(tuple(r) for r in spark.read.table(name).collect())
 

@@ -26,9 +26,14 @@ MULTIGRAPH = [(0, 1), (0, 1), (1, 1), (1, 0), (2, 0), (0, 2)]
 
 
 def _pagerank_on(path, *args, **kw):
-    """pagerank(*args, **kw) on the one-task kernel or the sweep loop."""
+    """pagerank(*args, **kw) on the one-task kernel or the sweep loop. A
+    call that builds its own graph ranks its edge rows in the one task
+    while they fit the one-task build, so on the sweep loop they fit
+    neither (and the graph is built on Spark's workers)."""
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(pagerank_task, "fits", lambda g: path == "kernel")
+        if path == "sweep":
+            mp.setattr(graph_task, "fits", lambda m: False)
         return pagerank(*args, **kw)
 
 
@@ -99,13 +104,14 @@ def test_capped_runs_agree(spark, cap):
 
 def test_warm_start_partial_and_foreign_ids(spark):
     """Graph ids absent from ``init_ranks``, or with a null rank there,
-    start at 1/N; ids in ``init_ranks`` absent from the graph are
-    ignored. Zero sweeps return the start ranks themselves; three sweeps
-    from them agree on both paths."""
+    start at 1/N; ids in ``init_ranks`` absent from the graph, and null
+    ids, are ignored. Zero sweeps return the start ranks themselves;
+    three sweeps from them agree on both paths."""
     g = build_graph(edges_from_pairs(spark, MINI_EDGES))
     init = {nid: 0.01 * (nid + 1) for nid in range(0, 10, 2)}  # evens only
     init.update({10**6: 0.5, 10**6 + 1: 0.25})  # not in the graph
-    rows = list(init.items()) + [(1, None)]  # a null start rank: 1/N
+    # a null start rank: 1/N; a start rank of a null id: no node's
+    rows = list(init.items()) + [(1, None), (None, 0.3)]
     init_df = spark.createDataFrame(rows, "id LONG, rank DOUBLE")
     start = {nid: init.get(nid, 1.0 / 10) for nid in range(10)}
     runs = {}
@@ -160,8 +166,8 @@ def test_empty_edge_list_unpersists_own_graph(spark, monkeypatch):
     before = persisted()
     built = []
 
-    def build(edges):
-        built.append(build_graph(edges))
+    def build(edges, weight_col=None):
+        built.append(build_graph(edges, weight_col))
         return built[-1]
 
     monkeypatch.setattr(pagerank_module, "build_graph", build)

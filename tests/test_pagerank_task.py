@@ -8,33 +8,64 @@ from ps_projekt_pagerank_spark.fixtures import MINI_EDGES
 from ps_projekt_pagerank_spark.operators import graph_task
 from ps_projekt_pagerank_spark.operators.pagerank_task import (
     ADJ,
+    EDGES,
     INIT,
     NODES,
     _task,
     budget_bytes,
 )
 from ps_projekt_pagerank_spark.oracle import pagerank as oracle_pagerank
+from tests.test_pagerank_spark import MULTIGRAPH
 
-def _union(edge_list, init=(), chunk=4):
-    """The input pagerank_one_task feeds its task: the graph as the
-    one-task build packs it, ``chunk`` entries a slice, then the start
-    ranks of a warm start (``init``, (id, rank) pairs)."""
-    edges = pa.RecordBatch.from_pydict(
-        {"src": [s for s, _ in edge_list], "dst": [d for _, d in edge_list]},
-        schema=pa.schema([("src", pa.int64()), ("dst", pa.int64())]),
-    )
-    starts = pa.RecordBatch.from_pydict(
+_EDGE_SCHEMA = pa.schema([("src", pa.int64()), ("dst", pa.int64())])
+
+
+def _starts(init=()):
+    """The start ranks of a warm start (``init``, (id, rank) pairs) as
+    the task's INIT rows."""
+    return pa.RecordBatch.from_pydict(
         {"tag": [INIT] * len(init), "id": [i for i, _ in init],
          "rank": [r for _, r in init]},
         schema=pa.schema([("tag", pa.int8()), ("id", pa.int64()),
                           ("rank", pa.float64())]),
     )
-    return [*graph_task._task(iter([edges]), False, chunk), starts]
 
 
-def _run(batches, max_iterations=1000, num_nodes=10):
+def _union(edge_list, init=(), chunk=4):
+    """The task's input for a one-task build's graph: the graph as that
+    build packs it, ``chunk`` entries a slice, then the start ranks."""
+    edges = pa.RecordBatch.from_pydict(
+        {"src": [s for s, _ in edge_list], "dst": [d for _, d in edge_list]},
+        schema=_EDGE_SCHEMA,
+    )
+    return [*graph_task._task(iter([edges]), chunk), _starts(init)]
+
+
+def _edge_union(edge_list, init=()):
+    """The task's input for a graph it builds itself: the edge rows
+    (tag EDGES), then the start ranks."""
+    edges = pa.RecordBatch.from_pydict(
+        {"tag": [EDGES] * len(edge_list), "src": [s for s, _ in edge_list],
+         "dst": [d for _, d in edge_list]},
+        schema=pa.schema([("tag", pa.int8()), *_EDGE_SCHEMA]),
+    )
+    return [edges, _starts(init)]
+
+
+def _recounted(batches, num_nodes):
+    """``batches`` with the node count the packed rows' first row
+    carries set to ``num_nodes``."""
+    if not batches:
+        return batches
+    first = batches[0]
+    i = first.schema.get_field_index("num_nodes")
+    return [first.set_column(i, "num_nodes", pa.array([num_nodes], pa.int64())),
+            *batches[1:]]
+
+
+def _run(batches, max_iterations=1000):
     out = pa.Table.from_batches(list(_task(
-        iter(batches), num_nodes, DAMPING, NORTH_EPSILON, max_iterations
+        iter(batches), DAMPING, NORTH_EPSILON, max_iterations
     ))).to_pylist()
     ranks = {r["id"]: r["rank"] for r in out if r["id"] is not None}
     (sweeps,) = [r["sweeps"] for r in out if r["id"] is None]
@@ -49,6 +80,22 @@ def test_task_matches_oracle():
     assert records[-1][1] == 0
     assert ranks.keys() == expected.keys()
     assert max(abs(ranks[v] - expected[v]) for v in expected) < 1e-12
+
+
+def test_edge_row_task_matches_oracle():
+    """The task builds the graph from edge rows itself: cold, it ranks
+    as the oracle does; warm-started from 1/N for every node, it is the
+    cold run; from other start ranks, it ranks exactly as the task over
+    the packed graph of the same edges."""
+    expected, iterations = oracle_pagerank(MULTIGRAPH, delta=NORTH_EPSILON)
+    uniform = [(v, 1 / len(expected)) for v in expected]
+    for init in ((), uniform):
+        ranks, records = _run(_edge_union(MULTIGRAPH, init))
+        assert [i for i, _ in records] == list(range(1, iterations)), init
+        assert ranks.keys() == expected.keys()
+        assert max(abs(ranks[v] - expected[v]) for v in expected) < 1e-12
+    init = [(0, 0.3), (4, 0.2), (9, 0.1), (10**6, 0.5)]
+    assert _run(_edge_union(MINI_EDGES, init)) == _run(_union(MINI_EDGES, init))
 
 
 def test_task_capped_run_keeps_active_nodes():
@@ -75,7 +122,7 @@ def test_task_warm_start_partial_and_foreign_ids():
 )
 def test_task_raises_on_inconsistent_input(batches, num_nodes, message):
     with pytest.raises(ValueError, match=message):
-        _run(batches, num_nodes=num_nodes)
+        _run(_recounted(batches, num_nodes))
 
 
 def test_budget_is_an_eighth_of_memtotal(tmp_path):
